@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, IntegerType,
+  LongType, ShortType, StructField, StructType}
+
+import scala.collection.mutable.ArrayBuilder
 
 /** Distributed graph primitives needed by training-data pipelines —
   * chiefly connected components, which turns near-duplicate PAIRS (from
@@ -22,6 +25,23 @@ import org.apache.spark.sql.types.DecimalType
   * Beyond"). `localCheckpoint` after each round truncates lineage —
   * without it the plan doubles per iteration and Catalyst re-optimizes
   * an exponentially growing tree.
+  *
+  * Single-task arm: connected components, kCore, label propagation,
+  * triangle enumeration and PageRank each run in ONE task over an
+  * interned in-memory graph ([[LocalGraph]]) when the graph is small.
+  * On such graphs the iterative loops are per-job fixed cost: the sf0.1
+  * near-dup graph's ~20 CC jobs carried under 0.5 s of task work inside
+  * ~2 s. The gate is one conf key, `graft.graph.localEdges` (default
+  * 2000000), compared with the edge-row count each operator already
+  * takes (PageRank also compares its vertex-row count). It bounds the
+  * task's memory: 2M edges are ~130 MB of rows plus a few int/long
+  * arrays per edge, well inside one task's execution memory. Above it
+  * the distributed arm runs unchanged; `GraphOpsSpec` pins each local
+  * arm equal to it with the gate forced to 0. Ids must be Byte, Short,
+  * Int, Long or DecimalType(p ≤ 18, 0): they are interned as longs, whose
+  * order is Spark's order for those types (strings differ: UTF-8 binary
+  * vs UTF-16 code units), and come back out at their input type. Other
+  * id types take the distributed arm at any size.
   */
 object GraphOps {
 
@@ -54,75 +74,34 @@ object GraphOps {
     // already-materialized local blocks). At scale the count lands at
     // the core cap and the layout is unchanged.
     val m = eRaw.count()
-    // Single-task union-find fast path (r21, guide §2/§5): when the edge
-    // list fits comfortably in ONE task, the iterative loop is pure
-    // per-job fixed cost — OptProbe measured ~2 s of driver/job-setup
-    // overhead (~20 jobs: sym-distinct + init agg + 2 jobs/round × ~6
-    // rounds) on a pre-checkpointed sf0.1 near-dup graph whose actual
-    // task work sums to well under 0.5 s. Union-find over the raw pairs
-    // in a single executor task computes the same fixpoint labels
-    // (minimum id per component — union-find is exact, so it equals the
-    // CONVERGED iterative answer) with 2 jobs total. The gate is a
-    // measured edge budget (2M edges ≈ ~130 MB of rows + ~2·m map
-    // entries in the task — comfortably inside one task's execution
-    // memory), configurable for other deployments; above it — any real
-    // corpus-scale graph — the iterative O(log d)-round path below runs
-    // unchanged. Restricted to integral/decimal(·,0) ids so the
-    // in-task Comparable min matches Spark's min/least ordering
-    // bit-for-bit (strings differ: UTF-8 binary vs UTF-16 code units).
+    // Local arm: union-find is exact, so the minimum id per component
+    // equals the CONVERGED iterative labels.
     val idType = eRaw.schema("u").dataType
-    val fastIds = idType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
-      case _ => false
-    }
-    val fastGate = edges.sparkSession.conf
-      .get("graft.cc.localEdges", "2000000").toLong
-    if (fastIds && m <= fastGate) {
-      import org.apache.spark.sql.types.{StructField, StructType}
-      val outSchema = StructType(Seq(
-        StructField("id", idType), StructField("comp", idType)))
-      // coalesce(1) is NARROW over the checkpoint's materialized blocks
-      val labels = eRaw.coalesce(1).mapPartitions { rows =>
-        val idx = new java.util.HashMap[Any, Integer](1 << 12)
-        val vals = new scala.collection.mutable.ArrayBuffer[Any]()
-        val parent = new scala.collection.mutable.ArrayBuffer[Int]()
-        def nodeOf(a: Any): Int = {
-          val existing = idx.get(a)
-          if (existing != null) existing.intValue()
-          else {
-            val i = vals.length
-            idx.put(a, Integer.valueOf(i)); vals += a; parent += i; i
-          }
-        }
+    if (LocalGraph.integral(idType) && LocalGraph.fits(edges.sparkSession, m)) {
+      val out = StructType(Seq(StructField("id", idType), StructField("comp", idType)))
+      return LocalGraph.run(out, eRaw) { g =>
+        val parent = Array.range(0, g.n)
         def find(x0: Int): Int = {
           var x = x0
           while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
           x
         }
-        while (rows.hasNext) {
-          val r = rows.next()
-          val ra = find(nodeOf(r.get(0)))
-          val rb = find(nodeOf(r.get(1)))
-          if (ra != rb) parent(rb) = ra
-        }
-        val n = vals.length
-        val minv = new Array[Any](n)
         var i = 0
-        while (i < n) {
-          val r = find(i)
-          val v = vals(i)
-          if (minv(r) == null ||
-              v.asInstanceOf[Comparable[Any]].compareTo(minv(r)) < 0) minv(r) = v
+        while (i < g.from.length) {
+          val ra = find(g.from(i))
+          val rb = find(g.to(i))
+          if (ra != rb) parent(rb) = ra
           i += 1
         }
-        (0 until n).iterator.map(j =>
-          org.apache.spark.sql.Row(vals(j), minv(find(j))))
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-        System.err.println(s"[cc] single-task fast path, m=$m")
-      return labels.toDF().localCheckpoint()
+        val minv = Array.fill(g.n)(-1) // per root: the vertex with the least id
+        i = 0
+        while (i < g.n) {
+          val r = find(i)
+          if (minv(r) < 0 || g.key(i) < g.key(minv(r))) minv(r) = i
+          i += 1
+        }
+        Iterator.range(0, g.n).map(x => Row(g.id(x), g.id(minv(find(x)))))
+      }.localCheckpoint()
     }
     val targetParts = math.min(
       edges.sparkSession.sparkContext.defaultParallelism.toLong,
@@ -149,12 +128,7 @@ object GraphOps {
     // DecimalType(38,0) cast, so a sub-unit label change could leave the
     // sum unchanged and declare convergence early. Those — and string
     // fingerprints — take the exact join-and-diff path instead.
-    val numericIds = labels.schema("comp").dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
-      case _ => false
-    }
+    val numericIds = LocalGraph.integral(labels.schema("comp").dataType, fitsLong = false)
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
       Option(df.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0))
     def unchanged(next: DataFrame, prev: DataFrame): Boolean =
@@ -197,8 +171,6 @@ object GraphOps {
       labels = next
       iter += 1
     }
-    if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-      System.err.println(s"[cc] converged after $iter iterations, m=$m")
     labels
   }
 
@@ -223,88 +195,39 @@ object GraphOps {
     var e = edges.select(col(cu).as("u"), col(cv).as("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
     var m = e.count()
-    // Single-task peel fast path (r21, guide §2/§5) — the
-    // connectedComponents recipe: under a measured edge budget the
-    // iterative peel's per-round jobs (2/round × up to 30 rounds) are
-    // pure driver/job fixed cost next to an in-task bucket peel, which
-    // computes the SAME unique fixpoint (the k-core is the maximal
-    // subgraph of min degree ≥ k; peel order doesn't change it, and the
-    // multigraph degree counting below matches the loop's union-based
-    // double-count row for row). Same integral-id gate as CC so nothing
-    // about ordering semantics can differ; above the gate the loop runs
-    // unchanged.
-    val kIdType = e.schema("u").dataType
-    val kFastIds = kIdType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
-      case _ => false
-    }
-    val kFastGate = edges.sparkSession.conf
-      .get("graft.kcore.localEdges", "2000000").toLong
-    if (kFastIds && m <= kFastGate) {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val outSchema = StructType(Seq(
-        StructField("id", kIdType), StructField("core_degree", LongType, nullable = false)))
-      val kk = k
-      val core = e.coalesce(1).mapPartitions { rows =>
-        val idx = new java.util.HashMap[Any, Integer](1 << 12)
-        val vals = new scala.collection.mutable.ArrayBuffer[Any]()
-        def nodeOf(a: Any): Int = {
-          val existing = idx.get(a)
-          if (existing != null) existing.intValue()
-          else {
-            val i = vals.length
-            idx.put(a, Integer.valueOf(i)); vals += a; i
-          }
-        }
-        val ea = new scala.collection.mutable.ArrayBuffer[Int]()
-        val eb = new scala.collection.mutable.ArrayBuffer[Int]()
-        while (rows.hasNext) {
-          val r = rows.next()
-          ea += nodeOf(r.get(0)); eb += nodeOf(r.get(1))
-        }
-        val n = vals.length
-        val nE = ea.length
-        val deg = new Array[Int](n)
-        var i = 0
-        while (i < nE) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
-        // CSR adjacency (each distinct directed row contributes both ways,
-        // exactly like the loop's e ∪ e.swap degree count)
-        val off = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-        val pos = java.util.Arrays.copyOf(off, n)
-        val nbr = new Array[Int](2 * nE)
-        i = 0
-        while (i < nE) {
-          nbr(pos(ea(i))) = eb(i); pos(ea(i)) += 1
-          nbr(pos(eb(i))) = ea(i); pos(eb(i)) += 1
-          i += 1
-        }
-        val removed = new Array[Boolean](n)
-        val queue = new java.util.ArrayDeque[Integer](64)
-        i = 0
-        while (i < n) { if (deg(i) < kk) queue.add(Integer.valueOf(i)); i += 1 }
-        while (!queue.isEmpty) {
-          val x = queue.poll().intValue()
-          if (!removed(x)) {
-            removed(x) = true
-            var j = off(x)
-            while (j < off(x + 1)) {
-              val y = nbr(j)
-              if (!removed(y)) {
-                deg(y) -= 1
-                if (deg(y) == kk - 1) queue.add(Integer.valueOf(y))
-              }
-              j += 1
+    // Local arm: the k-core is the maximal subgraph of min degree ≥ k, so
+    // peel order cannot change it, and counting each distinct row toward
+    // both endpoints matches the loop's union-based multigraph degree.
+    val idType = e.schema("u").dataType
+    if (LocalGraph.integral(idType) && LocalGraph.fits(edges.sparkSession, m)) {
+      val out = StructType(Seq(StructField("id", idType),
+        StructField("core_degree", LongType, nullable = false)))
+      return LocalGraph.run(out, e) { g =>
+        val (off, nbr) = LocalGraph.csr(g.n, g.from ++ g.to, g.to ++ g.from)
+        val deg = Array.tabulate(g.n)(v => off(v + 1) - off(v))
+        val removed = new Array[Boolean](g.n)
+        // a vertex is queued once: when its degree starts below k or
+        // drops to exactly k - 1
+        val queue = new Array[Int](g.n)
+        var qn = 0
+        var v = 0
+        while (v < g.n) { if (deg(v) < k) { queue(qn) = v; qn += 1 }; v += 1 }
+        while (qn > 0) {
+          qn -= 1
+          val x = queue(qn)
+          removed(x) = true
+          var j = off(x)
+          while (j < off(x + 1)) {
+            val y = nbr(j)
+            if (!removed(y)) {
+              deg(y) -= 1
+              if (deg(y) == k - 1) { queue(qn) = y; qn += 1 }
             }
+            j += 1
           }
         }
-        (0 until n).iterator.filter(!removed(_)).map(j =>
-          org.apache.spark.sql.Row(vals(j), deg(j).toLong))
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      return core.toDF().localCheckpoint()
+        Iterator.range(0, g.n).filter(!removed(_)).map(v => Row(g.id(v), deg(v).toLong))
+      }.localCheckpoint()
     }
     var done = m == 0L
     var iter = 0
@@ -365,107 +288,56 @@ object GraphOps {
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).localCheckpoint()
     val mE = e.count()
-    // Single-task fast path (r21, guide §2/§5) — the connectedComponents
-    // recipe applied to the third graph loop: under a measured edge
-    // budget the 3-round join/agg/window/join cycle (4 shuffles + a
-    // checkpoint per round) is pure per-job fixed cost next to an
-    // in-task frequency argmax, which reproduces the SYNCHRONOUS
-    // deterministic semantics row for row (argmax neighbor-label count,
-    // ties to the SMALLEST label, nodes without labeled in-neighbors
-    // keep their label — multiset edge counting included). Same
-    // integral-id gate as CC so in-task ordering matches Spark's;
-    // above the gate the iterative path runs unchanged.
-    val lpaIdType = nodes.schema(idCol).dataType
-    val lpaFastIds = (lpaIdType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
-      case _ => false
-    }) && e.schema("src").dataType == lpaIdType && e.schema("dst").dataType == lpaIdType
-    val lpaGate = edges.sparkSession.conf
-      .get("graft.lpa.localEdges", "2000000").toLong
-    if (lpaFastIds && mE <= lpaGate) {
-      import org.apache.spark.sql.types.{StructField, StructType}
-      val outSchema = StructType(Seq(
-        StructField("id", lpaIdType), StructField("label", lpaIdType)))
+    // Local arm: the same synchronous rounds over in-neighbour lists —
+    // argmax neighbour-label count, ties to the SMALLEST label, nodes
+    // without labelled in-neighbours keep their label, every edge row
+    // counted. The loop keeps repeated node rows: a repeated id joins its
+    // out-edges once per copy and comes out once per copy.
+    val idType = nodes.schema(idCol).dataType
+    if (LocalGraph.integral(idType) && e.schema("src").dataType == idType &&
+        e.schema("dst").dataType == idType && LocalGraph.fits(edges.sparkSession, mE)) {
+      val out = StructType(Seq(StructField("id", idType), StructField("label", idType)))
       val nodesCk = nodes.select(col(idCol).as("id")).localCheckpoint()
-      // one frame, kind-tagged, so a single narrow coalesce(1) sees both
-      // inputs (checkpointed blocks only — no shuffle)
-      val tagged = nodesCk.select(lit(0).as("k"), col("id").as("a"), col("id").as("b"))
-        .unionAll(e.select(lit(1).as("k"), col("src").as("a"), col("dst").as("b")))
-      val rounds = iters
-      val out = tagged.coalesce(1).mapPartitions { rows =>
-        val idx = new java.util.HashMap[Any, Integer](1 << 12)
-        val ids = new scala.collection.mutable.ArrayBuffer[Any]()
-        val es = new scala.collection.mutable.ArrayBuffer[Int]()
-        val ed = new scala.collection.mutable.ArrayBuffer[Int]()
-        val pendSrc = new scala.collection.mutable.ArrayBuffer[Any]()
-        val pendDst = new scala.collection.mutable.ArrayBuffer[Any]()
-        while (rows.hasNext) {
-          val r = rows.next()
-          if (r.getInt(0) == 0) {
-            val a = r.get(1)
-            if (!idx.containsKey(a)) { idx.put(a, Integer.valueOf(ids.length)); ids += a }
-          } else { pendSrc += r.get(1); pendDst += r.get(2) }
-        }
-        // edges whose src is not a node never contribute a label (the
-        // join with the label frame drops them); dst-only-outside rows
-        // are dropped by the final left join — skip both up front
-        var i = 0
-        while (i < pendSrc.length) {
-          val si = idx.get(pendSrc(i)); val di = idx.get(pendDst(i))
-          if (si != null && di != null) { es += si.intValue(); ed += di.intValue() }
-          i += 1
-        }
-        val n = ids.length
-        val nE2 = es.length
-        // CSR by dst so each round walks in-neighbors contiguously
-        val indeg = new Array[Int](n)
-        i = 0; while (i < nE2) { indeg(ed(i)) += 1; i += 1 }
-        val off = new Array[Int](n + 1)
-        i = 0; while (i < n) { off(i + 1) = off(i) + indeg(i); i += 1 }
-        val pos = java.util.Arrays.copyOf(off, n)
-        val inNbr = new Array[Int](nE2)
-        i = 0
-        while (i < nE2) { inNbr(pos(ed(i))) = es(i); pos(ed(i)) += 1; i += 1 }
-        var labels: Array[Any] = ids.toArray
-        var round = 0
-        while (round < rounds) {
-          val next = new Array[Any](n)
-          val freq = new java.util.HashMap[Any, java.lang.Long](64)
+      return LocalGraph.run(out, e, Some(nodesCk)) { g =>
+        val copies = g.copies
+        // an edge with an endpoint outside the node frame never carries a
+        // label: the loop's join drops its src, its final left join its dst
+        val inside = g.inside
+        val (off, inNbr) = LocalGraph.csr(g.n, inside.map(g.to), inside.map(g.from))
+        var label = Array.range(0, g.n) // a label is the vertex whose id it is
+        val votes = new Array[Long](g.n)
+        val seen = new Array[Int](g.n)
+        for (_ <- 1 to iters) {
+          val next = label.clone()
           var d = 0
-          while (d < n) {
-            if (indeg(d) == 0) next(d) = labels(d)
-            else {
-              freq.clear()
-              var j = off(d)
-              while (j < off(d + 1)) {
-                val l = labels(inNbr(j))
-                val c = freq.get(l)
-                freq.put(l, java.lang.Long.valueOf(if (c == null) 1L else c.longValue() + 1L))
-                j += 1
+          while (d < g.nNodes) {
+            var ns = 0
+            var j = off(d)
+            while (j < off(d + 1)) {
+              val l = label(inNbr(j))
+              if (votes(l) == 0L) { seen(ns) = l; ns += 1 }
+              votes(l) += copies(inNbr(j))
+              j += 1
+            }
+            if (ns > 0) {
+              var best = seen(0)
+              var q = 1
+              while (q < ns) {
+                val l = seen(q)
+                if (votes(l) > votes(best) ||
+                    (votes(l) == votes(best) && g.key(l) < g.key(best))) best = l
+                q += 1
               }
-              var bestL: Any = null
-              var bestC = 0L
-              val it = freq.entrySet().iterator()
-              while (it.hasNext) {
-                val en = it.next()
-                val c = en.getValue.longValue()
-                val better = c > bestC ||
-                  (c == bestC && (bestL == null ||
-                    en.getKey.asInstanceOf[Comparable[Any]].compareTo(bestL) < 0))
-                if (better) { bestL = en.getKey; bestC = c }
-              }
-              next(d) = if (bestL == null) labels(d) else bestL
+              next(d) = best
+              q = 0
+              while (q < ns) { votes(seen(q)) = 0L; q += 1 }
             }
             d += 1
           }
-          labels = next
-          round += 1
+          label = next
         }
-        (0 until n).iterator.map(j => org.apache.spark.sql.Row(ids(j), labels(j)))
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      return out.toDF().localCheckpoint()
+        g.nodes.iterator.map(v => Row(g.id(v), g.id(label(v))))
+      }.localCheckpoint()
     }
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
     for (_ <- 1 to iters) {
@@ -586,106 +458,35 @@ object GraphOps {
     val und = edges.select(least(u, v).as("a"), greatest(u, v).as("b"))
       .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val nEdgesCnt = und.count() // cheap: und is checkpointed
-    // Single-task enumeration fast path (r21, guide §2/§5 — the
-    // CC/kCore/LPA recipe applied to the wedge machinery): under a
-    // measured edge budget the orientation joins + wedge self-join +
-    // bloom build + closing join are ~6 jobs whose fixed costs dwarf
-    // the actual work (sf0.1: 1.2M edges, ~41M wedge probes ≈ well
-    // under a second in one task). The in-task loop reproduces the
-    // SAME degree-ordered orientation ((deg, id) total order) and
-    // emits the identical triangle-row set (each triangle once, at its
-    // lowest-ordered vertex, neighbors in orientation order), so every
-    // consumer aggregation is unchanged. Integral ids only (in-task
-    // ordering must match Spark's); above the gate — the 100 TB
-    // co-occurrence graph — the distributed path below runs unchanged.
-    val triIdType = und.schema("a").dataType
-    val triFastIds = triIdType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    val triGate = edges.sparkSession.conf
-      .get("graft.triangle.localEdges", "2000000").toLong
-    if (triFastIds && nEdgesCnt <= triGate) {
-      import org.apache.spark.sql.types.{StructField, StructType}
+    // Local arm: the SAME degree-ordered orientation ((deg, id) total
+    // order) emits the identical triangle-row set — each triangle once, at
+    // its lowest-ordered vertex, neighbours in orientation order — so every
+    // consumer aggregation is unchanged.
+    val idType = und.schema("a").dataType
+    if (LocalGraph.integral(idType) && LocalGraph.fits(edges.sparkSession, nEdgesCnt)) {
       // degree frame still built distributed (one small exchange —
       // callers consume it directly); NOT checkpointed here: each
-      // caller reads it once, and with the fast path it no longer
-      // feeds orientation joins
+      // caller reads it once, and here it feeds no orientation joins
       val degF = und.select(col("a").as("n")).unionAll(und.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
-      val outSchema = StructType(Seq(
-        StructField("src", triIdType), StructField("x", triIdType),
-        StructField("y", triIdType)))
-      val tri = und.coalesce(1).mapPartitions { rows =>
-        // ids are integral (gate) — intern through a primitive
-        // open-addressing long->index map; a boxed HashMap here cost
-        // ~0.5 s of the task on the 2.4M endpoint lookups at sf0.1
-        var mcap = 1 << 16
-        var mkeys = new Array[Long](mcap)
-        var mvals = new Array[Int](mcap)
-        var mused = new Array[Boolean](mcap)
-        var msize = 0
-        val vals = new scala.collection.mutable.ArrayBuffer[Long]()
-        def rehash(): Unit = {
-          val oc = mcap; mcap <<= 1
-          val ok = mkeys; val ov = mvals; val ou = mused
-          mkeys = new Array[Long](mcap); mvals = new Array[Int](mcap)
-          mused = new Array[Boolean](mcap)
-          var i2 = 0
-          while (i2 < oc) {
-            if (ou(i2)) {
-              var h = (java.lang.Long.hashCode(ok(i2) * -7046029254386353131L) & (mcap - 1))
-              while (mused(h)) h = (h + 1) & (mcap - 1)
-              mused(h) = true; mkeys(h) = ok(i2); mvals(h) = ov(i2)
-            }
-            i2 += 1
-          }
-        }
-        def nodeOf(a: Long): Int = {
-          if (msize * 2 >= mcap) rehash()
-          var h = (java.lang.Long.hashCode(a * -7046029254386353131L) & (mcap - 1))
-          while (mused(h)) {
-            if (mkeys(h) == a) return mvals(h)
-            h = (h + 1) & (mcap - 1)
-          }
-          val i2 = vals.length
-          mused(h) = true; mkeys(h) = a; mvals(h) = i2; msize += 1
-          vals += a
-          i2
-        }
-        def longOf(a: Any): Long = a.asInstanceOf[Number].longValue()
-        val ea = new scala.collection.mutable.ArrayBuffer[Int]()
-        val eb = new scala.collection.mutable.ArrayBuffer[Int]()
-        while (rows.hasNext) {
-          val r = rows.next()
-          ea += nodeOf(longOf(r.get(0))); eb += nodeOf(longOf(r.get(1)))
-        }
-        val n = vals.length
-        val nE = ea.length
+      val out = StructType(Seq(StructField("src", idType), StructField("x", idType),
+        StructField("y", idType)))
+      val tri = LocalGraph.run(out, und) { g =>
+        val n = g.n
+        val nE = g.from.length
         val deg = new Array[Int](n)
         var i = 0
-        while (i < nE) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
+        while (i < nE) { deg(g.from(i)) += 1; deg(g.to(i)) += 1; i += 1 }
         // rank = position in the (deg, id) total order the distributed
-        // orientation uses; comparing ranks == comparing (deg, id).
-        // Integral ids order identically as longs, so the tuple order
-        // (deg asc, id asc) is exact.
-        val order = (0 until n).sortBy(j => (deg(j), vals(j)))
+        // orientation uses; comparing ranks == comparing (deg, id)
+        val order = (0 until n).sortBy(j => (deg(j), g.key(j)))
         val rank = new Array[Int](n)
         i = 0
         while (i < n) { rank(order(i)) = i; i += 1 }
-        // orient every edge low-rank -> high-rank; out-adjacency CSR
-        val outdeg = new Array[Int](n)
-        i = 0
-        while (i < nE) {
-          if (rank(ea(i)) < rank(eb(i))) outdeg(ea(i)) += 1 else outdeg(eb(i)) += 1
-          i += 1
-        }
-        val off = new Array[Int](n + 1)
-        i = 0; while (i < n) { off(i + 1) = off(i) + outdeg(i); i += 1 }
-        val pos = java.util.Arrays.copyOf(off, n)
-        val nbr = new Array[Int](nE)
-        // open-addressing set of oriented edges packed (src << 32) | dst
+        // orient every edge low-rank -> high-rank, and keep an
+        // open-addressing set of the oriented edges packed (lo << 32) | hi
+        val lo = new Array[Int](nE)
+        val hi = new Array[Int](nE)
         var cap = java.lang.Integer.highestOneBit(math.max(4, nE * 2) - 1) << 1
         if (cap < 4) cap = 4
         val slots = new Array[Long](cap)
@@ -705,11 +506,13 @@ object GraphOps {
         }
         i = 0
         while (i < nE) {
-          val (s, d2) = if (rank(ea(i)) < rank(eb(i))) (ea(i), eb(i)) else (eb(i), ea(i))
-          nbr(pos(s)) = d2; pos(s) += 1
-          put((s.toLong << 32) | (d2.toLong & 0xffffffffL))
+          val fwd = rank(g.from(i)) < rank(g.to(i))
+          lo(i) = if (fwd) g.from(i) else g.to(i)
+          hi(i) = if (fwd) g.to(i) else g.from(i)
+          put((lo(i).toLong << 32) | (hi(i).toLong & 0xffffffffL))
           i += 1
         }
+        val (off, nbr) = LocalGraph.csr(n, lo, hi)
         // neighbors sorted by rank so each wedge is generated once in
         // the same (x, y) orientation the distributed wedge filter
         // uses; packing (rank, idx) into one long keeps the slice
@@ -727,18 +530,11 @@ object GraphOps {
           while (j < off(i + 1)) { nbr(j) = (packed(j) & 0xffffffffL).toInt; j += 1 }
           i += 1
         }
-        // ids were interned as longs — emit them back at the input type
-        val restore: Long => Any = triIdType match {
-          case org.apache.spark.sql.types.ByteType => (l: Long) => l.toByte
-          case org.apache.spark.sql.types.ShortType => (l: Long) => l.toShort
-          case org.apache.spark.sql.types.IntegerType => (l: Long) => l.toInt
-          case _ => (l: Long) => l
-        }
         // lazy per-src emission: per-src triangle fan-out is bounded by
         // C(outdeg, 2) (orientation caps outdeg at ~sqrt(m)), so memory
         // stays src-local even on dense in-gate graphs
-        (0 until n).iterator.flatMap { s =>
-          val buf = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+        Iterator.range(0, n).flatMap { s =>
+          val buf = new scala.collection.mutable.ArrayBuffer[Row]()
           var a = off(s)
           while (a < off(s + 1)) {
             val x = nbr(a)
@@ -746,16 +542,15 @@ object GraphOps {
             while (b < off(s + 1)) {
               val y = nbr(b)
               if (has((x.toLong << 32) | (y.toLong & 0xffffffffL)))
-                buf += org.apache.spark.sql.Row(
-                  restore(vals(s)), restore(vals(x)), restore(vals(y)))
+                buf += Row(g.id(s), g.id(x), g.id(y))
               b += 1
             }
             a += 1
           }
           buf
         }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      return (und, degF, tri.toDF())
+      }
+      return (und, degF, tri)
     }
     // r20: below this MEASURED edge count the |V|-bounded degree table
     // (|V| <= 2|E|) fits the broadcast budget — broadcasting it turns
@@ -892,7 +687,6 @@ object GraphOps {
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     val idCol = vertices.columns(0)
     val sc = edges.sparkSession.sparkContext
     // Size-adaptive layout (r21) — the connectedComponents recipe
@@ -912,99 +706,51 @@ object GraphOps {
     val e0 = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).localCheckpoint()
     val m = e0.count()
-    // Single-task fast path (r21, guide §2/§5) — the connectedComponents
-    // recipe applied to the power iteration: under a measured edge+vertex
-    // budget the per-round join/agg/join cycle (2 shuffles + a checkpoint
-    // per round, ~8 jobs total) is pure per-job fixed cost next to an
-    // in-task loop that reproduces the quantized-BIGINT arithmetic
-    // OP FOR OP (same double divisions, same floor(x*1e12+0.5) grid,
-    // same long sums — bit-identical by construction, spec-pinned).
-    // Same integral-id gate as CC; above the gate the iterative path
-    // below runs unchanged.
-    val prIdType = vertices.schema(vertices.columns(0)).dataType
-    val prFastIds = (prIdType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }) && e0.schema("src").dataType == prIdType && e0.schema("dst").dataType == prIdType
-    val prGate = edges.sparkSession.conf
-      .get("graft.pagerank.localEdges", "2000000").toLong
-    // hoisted so a fast-path probe that fails the VERTEX gate hands its
+    // Local arm: replays the quantized-BIGINT arithmetic OP FOR OP (same
+    // double divisions, same floor(x*1e12+0.5) grid, same long sums), so
+    // ranks are bit-identical by construction.
+    val idType = vertices.schema(idCol).dataType
+    // hoisted so a probe that fails the VERTEX gate hands its
     // checkpoint+count to the iterative path instead of paying it twice
     var vertsCk: DataFrame = null
     var nVerts = -1L
-    if (prFastIds && m <= prGate) {
-      val vCk = vertices.select(col(vertices.columns(0)).as("id")).localCheckpoint()
-      val nV = vCk.count()
-      vertsCk = vCk
-      nVerts = nV
-      if (nV <= prGate) {
-        import org.apache.spark.sql.types.{StructField, StructType}
-        val outSchema = StructType(Seq(
-          StructField("id", prIdType),
+    if (LocalGraph.integral(idType) && e0.schema("src").dataType == idType &&
+        e0.schema("dst").dataType == idType && LocalGraph.fits(edges.sparkSession, m)) {
+      vertsCk = vertices.select(col(idCol).as("id")).localCheckpoint()
+      nVerts = vertsCk.count()
+      if (LocalGraph.fits(edges.sparkSession, nVerts)) {
+        val out = StructType(Seq(StructField("id", idType),
           StructField("pr", DoubleType, nullable = false)))
-        val tagged = vCk.select(lit(0).as("k"), col("id").as("a"), col("id").as("b"))
-          .unionAll(e0.select(lit(1).as("k"), col("src").as("a"), col("dst").as("b")))
-        val rounds = iters
-        val damp = damping
-        val out = tagged.coalesce(1).mapPartitions { rows =>
-          val idx = new java.util.HashMap[Any, Integer](1 << 12)
-          val vrows = new scala.collection.mutable.ArrayBuffer[Any]()
-          val pendSrc = new scala.collection.mutable.ArrayBuffer[Any]()
-          val pendDst = new scala.collection.mutable.ArrayBuffer[Any]()
-          while (rows.hasNext) {
-            val r = rows.next()
-            if (r.getInt(0) == 0) {
-              val a = r.get(1)
-              vrows += a
-              if (!idx.containsKey(a)) idx.put(a, Integer.valueOf(idx.size))
-            } else { pendSrc += r.get(1); pendDst += r.get(2) }
-          }
-          val n = idx.size
-          val nRows = vrows.length.toDouble // == verts.count() upstream
-          // out-degree counts EVERY edge row of a vertex src (rows whose
-          // dst is outside the vertex set still divide the mass — that
-          // rank leaks, exactly as in the iterative form); contribution
-          // edges need BOTH endpoints known (src for pr, dst to land)
-          val degc = new Array[Long](n)
-          val esrc = new scala.collection.mutable.ArrayBuffer[Int]()
-          val edst = new scala.collection.mutable.ArrayBuffer[Int]()
-          var i = 0
-          while (i < pendSrc.length) {
-            val si = idx.get(pendSrc(i))
-            if (si != null) {
-              degc(si.intValue()) += 1L
-              val di = idx.get(pendDst(i))
-              if (di != null) { esrc += si.intValue(); edst += di.intValue() }
-            }
-            i += 1
-          }
-          val nE2 = esrc.length
-          var pr = Array.fill(n)(1.0 / nRows)
-          val base = (1.0 - damp) / nRows
-          var round = 0
-          while (round < rounds) {
-            val sums = new Array[Long](n)
-            var j = 0
-            while (j < nE2) {
-              val s = esrc(j)
-              sums(edst(j)) +=
-                math.floor(pr(s) / degc(s).toDouble * 1e12 + 0.5).toLong
+        return LocalGraph.run(out, e0, Some(vertsCk)) { g =>
+          val copies = g.copies
+          val nRows = g.nodes.length.toDouble // == verts.count() below
+          // out-degree counts EVERY edge row of a src (rows whose dst is
+          // outside the vertex set still divide the mass — that rank
+          // leaks, exactly as in the iterative form); a contribution needs
+          // both endpoints in the vertex set and lands once per vertex row
+          // of its src (the loop's join repeats it)
+          val deg = new Array[Long](g.n)
+          var j = 0
+          while (j < g.from.length) { deg(g.from(j)) += 1L; j += 1 }
+          val inside = g.inside
+          var pr = Array.fill(g.n)(1.0 / nRows)
+          val base = (1.0 - damping) / nRows
+          for (_ <- 1 to iters) {
+            val sums = new Array[Long](g.n)
+            j = 0
+            while (j < inside.length) {
+              val s = g.from(inside(j))
+              sums(g.to(inside(j))) +=
+                math.floor(pr(s) / deg(s).toDouble * 1e12 + 0.5).toLong * copies(s)
               j += 1
             }
-            val next = new Array[Double](n)
-            var v = 0
-            while (v < n) {
-              next(v) = base + damp * (sums(v).toDouble / 1e12)
-              v += 1
-            }
+            val next = new Array[Double](g.n)
+            j = 0
+            while (j < g.n) { next(j) = base + damping * (sums(j).toDouble / 1e12); j += 1 }
             pr = next
-            round += 1
           }
-          vrows.iterator.map(a =>
-            org.apache.spark.sql.Row(a, pr(idx.get(a).intValue())))
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-        return out.toDF().localCheckpoint()
+          g.nodes.iterator.map(v => Row(g.id(v), pr(v)))
+        }.localCheckpoint()
       }
     }
     val e = sized(e0, m)
@@ -1032,5 +778,178 @@ object GraphOps {
         .localCheckpoint()
     }
     pr
+  }
+
+  /** The single-task arm shared by the graph operators above (the gate
+    * and id rule are in the [[GraphOps]] doc). Each operator checks
+    * [[integral]] and [[fits]], then hands [[run]] its materialized
+    * frames and an algorithm body over the interned [[Graph]].
+    */
+  private[operators] object LocalGraph {
+
+    /** Whether a graph with this many rows runs in one task. */
+    def fits(spark: SparkSession, rows: Long): Boolean =
+      rows <= spark.conf.get("graft.graph.localEdges", "2000000").toLong
+
+    /** Integral id types. `fitsLong` (the local arm's rule) further
+      * requires every value to fit a long: decimal precision ≤ 18.
+      */
+    def integral(t: DataType, fitsLong: Boolean = true): Boolean = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0 && (!fitsLong || d.precision <= 18)
+      case _ => false
+    }
+
+    /** An interned graph over vertices `0 until n`: edge row i is
+      * `from(i) -> to(i)`. With a vertex frame, its distinct ids are
+      * vertices `0 until nNodes` and `nodes` holds the vertex of each of
+      * its rows, repeats included; edge endpoints outside it come after.
+      * A null id is a vertex of its own that no edge row touches (a null
+      * endpoint is one vertex outside the frame), so no join matches it.
+      */
+    final class Graph private[LocalGraph] (val n: Int, val key: Array[Long],
+        val nodes: Array[Int], val nNodes: Int, val from: Array[Int], val to: Array[Int],
+        nulls: java.util.BitSet, restore: Long => Any) {
+      /** The vertex's id at the input type. */
+      def id(v: Int): Any = if (nulls.get(v)) null else restore(key(v))
+      /** Vertex-frame rows per vertex. */
+      def copies: Array[Long] = {
+        val c = new Array[Long](n)
+        nodes.foreach(v => c(v) += 1L)
+        c
+      }
+      /** Edge rows with both endpoints in the vertex frame. */
+      def inside: Array[Int] = {
+        val b = new ArrayBuilder.ofInt
+        var i = 0
+        while (i < from.length) { if (from(i) < nNodes && to(i) < nNodes) b += i; i += 1 }
+        b.result()
+      }
+    }
+
+    /** Adjacency in CSR form: the neighbours of `v` are
+      * `nbr(off(v) until off(v + 1))`, one per `from(i) == v`, in row order.
+      */
+    def csr(n: Int, from: Array[Int], to: Array[Int]): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](n + 1)
+      var i = 0
+      while (i < from.length) { off(from(i) + 1) += 1; i += 1 }
+      i = 0
+      while (i < n) { off(i + 1) += off(i); i += 1 }
+      val pos = java.util.Arrays.copyOf(off, n)
+      val nbr = new Array[Int](from.length)
+      i = 0
+      while (i < from.length) { nbr(pos(from(i))) = to(i); pos(from(i)) += 1; i += 1 }
+      (off, nbr)
+    }
+
+    /** Runs `body` in one task over the graph of `edges` (first two
+      * columns) and, when given, the one-column vertex frame `nodes`; the
+      * result has schema `out`. Both frames must already be materialized:
+      * coalesce(1) is narrow, so it would pull an unmaterialized subtree
+      * into the one task.
+      */
+    def run(out: StructType, edges: DataFrame, nodes: Option[DataFrame] = None)(
+        body: Graph => Iterator[Row]): DataFrame = {
+      val idType = edges.schema(0).dataType
+      // one frame, kind-tagged (0 vertex row, 1 edge row)
+      val tagged = edges.select(lit(1).as("k"), col(edges.columns(0)).as("a"),
+        col(edges.columns(1)).as("b"))
+      val input = nodes.fold(tagged)(v => v.select(lit(0).as("k"),
+        col(v.columns(0)).as("a"), col(v.columns(0)).as("b")).unionAll(tagged))
+      input.coalesce(1).mapPartitions(rows => body(read(rows, idType)))(Encoders.row(out))
+    }
+
+    private def read(rows: Iterator[Row], idType: DataType): Graph = {
+      val ids = new LongInterner
+      val nulls = new java.util.BitSet
+      def nullVertex(): Int = { val v = ids.add(0L); nulls.set(v); v }
+      def asLong(a: Any): Long = a.asInstanceOf[Number].longValue()
+      // vertex rows are interned first; edge ids wait until all are in
+      val nodes = new ArrayBuilder.ofInt
+      var nullNode = -1
+      val ends = new ArrayBuilder.ofLong // src, dst of each edge row
+      val nullEnds = new java.util.BitSet // positions in `ends` that are null
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (r.getInt(0) == 0) {
+          if (r.isNullAt(1)) { if (nullNode < 0) nullNode = nullVertex(); nodes += nullNode }
+          else nodes += ids(asLong(r.get(1)))
+        } else {
+          var c = 1
+          while (c <= 2) {
+            if (r.isNullAt(c)) { nullEnds.set(ends.length); ends += 0L } else ends += asLong(r.get(c))
+            c += 1
+          }
+        }
+      }
+      val nNodes = ids.n
+      val e = ends.result()
+      var nullEnd = -1
+      def vertex(p: Int): Int =
+        if (!nullEnds.get(p)) ids(e(p))
+        else { if (nullEnd < 0) nullEnd = nullVertex(); nullEnd }
+      val from = new Array[Int](e.length / 2)
+      val to = new Array[Int](e.length / 2)
+      var i = 0
+      while (i < from.length) { from(i) = vertex(2 * i); to(i) = vertex(2 * i + 1); i += 1 }
+      val restore: Long => Any = idType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case LongType => identity
+        case _ => java.math.BigDecimal.valueOf(_) // DecimalType(p ≤ 18, 0)
+      }
+      new Graph(ids.n, ids.keys, nodes.result(), nNodes, from, to, nulls, restore)
+    }
+
+    /** Primitive open-addressing long -> vertex interner; a boxed HashMap
+      * cost ~0.5 s of the triangle task on its 2.4M endpoint lookups at
+      * sf0.1.
+      */
+    private final class LongInterner {
+      private var key = new Array[Long](1 << 12)
+      private var table = new Array[Int](1 << 16) // vertex + 1; 0 = empty
+      var n = 0
+
+      private def home(k: Long): Int =
+        java.lang.Long.hashCode(k * -7046029254386353131L) & (table.length - 1)
+
+      def apply(k: Long): Int = {
+        var h = home(k)
+        while (table(h) != 0) {
+          if (key(table(h) - 1) == k) return table(h) - 1
+          h = (h + 1) & (table.length - 1)
+        }
+        val v = add(k)
+        table(h) = v + 1
+        if (2 * n >= table.length) grow()
+        v
+      }
+
+      /** A new vertex with key `k` that no lookup finds (a null id). */
+      def add(k: Long): Int = {
+        if (n == key.length) key = java.util.Arrays.copyOf(key, 2 * n)
+        key(n) = k
+        n += 1
+        n - 1
+      }
+
+      def keys: Array[Long] = java.util.Arrays.copyOf(key, n)
+
+      private def grow(): Unit = {
+        val old = table
+        table = new Array[Int](2 * old.length)
+        var i = 0
+        while (i < old.length) {
+          if (old(i) != 0) {
+            var h = home(key(old(i) - 1))
+            while (table(h) != 0) h = (h + 1) & (table.length - 1)
+            table(h) = old(i)
+          }
+          i += 1
+        }
+      }
+    }
   }
 }

@@ -1,10 +1,38 @@
 package graft
 
 import graft.operators.GraphOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{DataType, DecimalType, IntegerType, LongType}
 
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  private def withGate[T](rows: Long)(body: => T): T = {
+    spark.conf.set("graft.graph.localEdges", rows.toString)
+    try body finally spark.conf.unset("graft.graph.localEdges")
+  }
+
+  /** Runs `body` with every graph operator forced onto its general arm. */
+  private def withGeneralArm[T](body: => T): T = withGate(0L)(body)
+
+  private def withIds(df: DataFrame, t: DataType): DataFrame =
+    df.select(df.columns.map(c => col(c).cast(t)).toIndexedSeq: _*)
+
+  /** For ids cast to Int, Long, the widest decimal the local arm takes
+    * and one it refuses: both arms give the same rows (repeats counted),
+    * and `idCol` comes out at the input type.
+    */
+  private def bothArms(idCol: String)(op: DataType => DataFrame): Unit =
+    for (t <- Seq(IntegerType, LongType, DecimalType(18, 0), DecimalType(20, 0))) {
+      def arm(): (DataType, Seq[String]) = {
+        val df = op(t)
+        (df.schema(idCol).dataType, df.collect().map(_.toString).sorted.toSeq)
+      }
+      val fast = arm()
+      assert(fast == withGeneralArm(arm()), s"$t")
+      assert(fast._1 == t, s"$t")
+    }
 
   test("connected components: chain, triangle, isolated pair -> min-id labels") {
     val edges = Seq(
@@ -73,13 +101,25 @@ class GraphOpsSpec extends SparkSpec {
     val nodes = ((1L to 4L) ++ (11L to 14L) ++ Seq(50L, 51L, 52L, 99L)).toDF("id")
     val fast = GraphOps.labelPropagation(nodes, edges, iters = 3)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("graft.lpa.localEdges", "0")
-    try {
+    withGeneralArm {
       val iterative = GraphOps.labelPropagation(nodes, edges, iters = 3)
         .as[(Long, Long)].collect().toMap
       assert(fast == iterative)
-    } finally spark.conf.unset("graft.lpa.localEdges")
+    }
     assert(fast(51L) == 50L && fast(99L) == 99L && !fast.contains(888L))
+    // a repeated node id counts once per copy toward its neighbours'
+    // label frequencies and comes out once per copy: 52 twice outvotes
+    // 50 at 51
+    val repeated = nodes.union(Seq(52L).toDF("id"))
+    // a null id matches no join: a null node keeps its null label and an
+    // edge row with a null endpoint carries no label
+    val nullNode = nodes.union(Seq(Option.empty[Long]).toDF("id"))
+    val nullEnds = edges.union(Seq[(Option[Long], Option[Long])](
+      (None, Some(51L)), (Some(50L), None)).toDF("src", "dst"))
+    for ((ns, es) <- Seq((nodes, edges), (repeated, edges), (nullNode, nullEnds)))
+      bothArms("id") { t =>
+        GraphOps.labelPropagation(withIds(ns, t), withIds(es, t), iters = 3)
+      }
   }
 
   test("pageRank single-task fast path matches the iterative path bit for bit") {
@@ -98,13 +138,31 @@ class GraphOpsSpec extends SparkSpec {
     val verts = (1L to 6L).toDF("id") // 99 isolated? keep 1..6
     val fast = GraphOps.pageRank(verts, edges, iters = 3)
       .as[(Long, Double)].collect().toMap
-    spark.conf.set("graft.pagerank.localEdges", "0")
-    try {
+    withGeneralArm {
       val iterative = GraphOps.pageRank(verts, edges, iters = 3)
         .as[(Long, Double)].collect().toMap
       assert(fast == iterative) // exact double equality — same op chain
-    } finally spark.conf.unset("graft.pagerank.localEdges")
+    }
     assert(!fast.contains(77L) && !fast.contains(7L))
+    // a repeated vertex id contributes once per copy and comes out once
+    // per copy, as in the loop's joins
+    val repeated = verts.union(Seq(1L).toDF("id"))
+    // a null id matches no join: a null vertex keeps the teleport rank, and
+    // an edge row with a null dst still divides its src's mass
+    val nullVertex = verts.union(Seq(Option.empty[Long]).toDF("id"))
+    val nullEnds = edges.union(Seq[(Option[Long], Option[Long])](
+      (None, Some(2L)), (Some(1L), None)).toDF("src", "dst"))
+    for ((vs, es) <- Seq((verts, edges), (repeated, edges), (nullVertex, nullEnds)))
+      bothArms("id") { t =>
+        GraphOps.pageRank(withIds(vs, t), withIds(es, t), iters = 3)
+      }
+    // edges within the gate, vertices over it: the local probe hands its
+    // vertex checkpoint and count to the iterative arm
+    val triangle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val isolated = (1L to 40L).toDF("id")
+    def ranks() = GraphOps.pageRank(isolated, triangle, iters = 3)
+      .as[(Long, Double)].collect().toMap
+    assert(withGate(10L)(ranks()) == withGeneralArm(ranks()))
   }
 
   test("bfsLevels: path distances, depth cap, early stop, unreachable excluded") {
@@ -153,13 +211,12 @@ class GraphOpsSpec extends SparkSpec {
     // RAISE (a silent superset is a wrong answer), naming maxIter —
     // an ITERATIVE-path property, so force past the r21 single-task
     // fast path (which is exact and never raises)
-    spark.conf.set("graft.kcore.localEdges", "0")
-    try {
+    withGeneralArm {
       val ex = intercept[IllegalStateException] {
         GraphOps.kCore(path60, k = 2, maxIter = 29).count()
       }
       assert(ex.getMessage.contains("maxIter"))
-    } finally spark.conf.unset("graft.kcore.localEdges")
+    }
   }
 
   test("kCore single-task peel matches the iterative path exactly") {
@@ -172,12 +229,12 @@ class GraphOpsSpec extends SparkSpec {
       Seq((40L, 41L), (41L, 40L))).toDF("u", "v")
     for (k <- 1 to 3) {
       val fast = GraphOps.kCore(edges, k = k).as[(Long, Long)].collect().toMap
-      spark.conf.set("graft.kcore.localEdges", "0")
-      try {
+      withGeneralArm {
         val iterative = GraphOps.kCore(edges, k = k).as[(Long, Long)].collect().toMap
         assert(fast == iterative, s"k=$k")
-      } finally spark.conf.unset("graft.kcore.localEdges")
+      }
     }
+    bothArms("id")(t => GraphOps.kCore(withIds(edges, t), k = 2))
   }
 
   test("q_kcore's driver graph converges well inside the oracle's 30-round unroll") {
@@ -202,9 +259,7 @@ class GraphOpsSpec extends SparkSpec {
         .select("u", "v")
       // force the iterative path: the 12-round-margin canary measures
       // CONVERGENCE DEPTH, which the exact fast path would mask
-      spark.conf.set("graft.kcore.localEdges", "0")
-      try assert(GraphOps.kCore(pairs, k = 2, maxIter = 12).count() > 0, dir)
-      finally spark.conf.unset("graft.kcore.localEdges")
+      withGeneralArm(assert(GraphOps.kCore(pairs, k = 2, maxIter = 12).count() > 0, dir))
     }
   }
 
@@ -231,11 +286,10 @@ class GraphOpsSpec extends SparkSpec {
     // gate 0 forces the DISTRIBUTED wedge machinery on both sides —
     // otherwise the r21 single-task fast path would bypass the bloom
     // entirely and this test would pin nothing
-    spark.conf.set("graft.triangle.localEdges", "0")
-    val (withBloom, noBloom) = try {
+    val (withBloom, noBloom) = withGeneralArm {
       (GraphOps.triangleCount(edges).collect().head,
         GraphOps.triangleCount(edges, maxBloomBytes = 0L).collect().head)
-    } finally spark.conf.unset("graft.triangle.localEdges")
+    }
     assert(withBloom.getAs[Long]("n_triangles") == noBloom.getAs[Long]("n_triangles"))
     assert(withBloom.getAs[Long]("n_edges") == noBloom.getAs[Long]("n_edges"))
     assert(noBloom.getAs[Long]("n_triangles") > 0L)
@@ -278,16 +332,16 @@ class GraphOpsSpec extends SparkSpec {
     val fastCc = GraphOps.clusteringCoefficients(edges).collect()
       .map(r => r.getAs[Long]("n") -> ((r.getAs[Long]("d"),
         r.getAs[Long]("t"), r.getAs[Double]("cc")))).toMap
-    spark.conf.set("graft.triangle.localEdges", "0")
-    try {
+    withGeneralArm {
       val distTri = GraphOps.triangleCount(edges).collect().head
       assert(fastTri == distTri)
       val distCc = GraphOps.clusteringCoefficients(edges).collect()
         .map(r => r.getAs[Long]("n") -> ((r.getAs[Long]("d"),
           r.getAs[Long]("t"), r.getAs[Double]("cc")))).toMap
       assert(fastCc == distCc)
-    } finally spark.conf.unset("graft.triangle.localEdges")
+    }
     assert(fastTri.getAs[Long]("n_triangles") > 0L)
+    bothArms("n")(t => GraphOps.clusteringCoefficients(withIds(edges, t)))
   }
 
   test("clustering coefficients match a brute-force oracle on a random graph") {
@@ -350,14 +404,14 @@ class GraphOpsSpec extends SparkSpec {
       ).toDF("src", "dst")
     val fast = GraphOps.connectedComponents(edges)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("graft.cc.localEdges", "0")
-    try {
+    withGeneralArm {
       val iterative = GraphOps.connectedComponents(edges)
         .as[(Long, Long)].collect().toMap
       assert(fast == iterative)
-    } finally spark.conf.unset("graft.cc.localEdges")
+    }
     assert(fast(6L) == 1L && fast(12L) == 10L && fast(21L) == 20L)
     assert(!fast.contains(30L))
+    bothArms("id")(t => GraphOps.connectedComponents(withIds(edges, t)))
   }
 
   test("string ids (fingerprint keys) take the join-diff convergence path and still converge") {
