@@ -1,6 +1,9 @@
 package graft
 
 import graft.ops.CoreOps
+import java.lang.management.ManagementFactory
+import java.util.concurrent.{Callable, CancellationException, ExecutionException, ExecutorService, Executors, Future}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,8 +28,9 @@ import org.apache.spark.sql.types._
   * The detail "fetch" is a pluggable function; the default fabricates a
   * deterministic match document per ID (zero-egress container). An HTTP
   * client slots in without touching plan shape: the fetch runs inside
-  * `mapPartitions`, so concurrency = partition count, and pacing/retry
-  * stay executor-side (the asyncio-semaphore analog, pipeline.py:50).
+  * `mapPartitions`, and a fetcher that blocks is overlapped on a per-JVM
+  * pool of [[MatchPipeline.MaxInFlight]] threads (the asyncio-semaphore
+  * analog, pipeline.py:50); retry stays executor-side.
   */
 object MatchPipeline {
 
@@ -92,35 +96,116 @@ object MatchPipeline {
     (200, doc)
   }
 
-  /** Executor-side fetch with bounded retry + pacing — the scalable form
-    * of the reference's semaphore + sleep + recursive-retry loop
+  /** Most detail calls the fetch pool has in flight per JVM: the
+    * reference's default `rate_limit`, the size of its `asyncio.Semaphore`
+    * (pipeline.py:50,126), so one process never holds more requests open
+    * against the API than the reference does. It is per JVM, not per
+    * partition, so more partitions do not raise it. The pool size is the
+    * bound; no semaphore is needed.
+    */
+  val MaxInFlight = 20
+
+  /** Calls each partition makes on its task thread, timed, before it
+    * decides whether its fetcher blocks.
+    */
+  private[graft] val ProbeCalls = 3
+
+  private lazy val fetchPool: ExecutorService =
+    Executors.newFixedThreadPool(MaxInFlight, { r: Runnable =>
+      val t = new Thread(r, "graft-fetch")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Executor-side fetch with bounded retry — the scalable form of the
+    * reference's semaphore + sleep + recursive-retry loop
     * (pipeline.py:49-80, matches.py:38-40, both retry paths buggy there;
     * here: bounded attempts, typed failure rows, no recursion).
+    *
+    * Each partition fetches its first `ProbeCalls` ids inline on the task
+    * thread, timing each call by wall clock and thread CPU. If every one
+    * of those calls spent over three quarters of its time off the CPU
+    * (the fetcher waits on a socket or a sleep), the rest of the partition
+    * goes through a sliding window of at most [[MaxInFlight]] futures on
+    * the shared per-JVM pool and comes back in input order. A CPU-bound
+    * fetcher stays inline, where the pool would only add hand-offs: it
+    * looks that idle only on a CPU oversubscribed four times over, or on
+    * a single call stalled by a GC pause or a class-init lock, so the
+    * rule asks for every probe call and for the three quarters. At
+    * most `MaxInFlight` + (running tasks) calls are in flight per JVM:
+    * the pool's threads plus task threads still probing or inline.
+    * The retry loop runs per id either way, so attempt counts do not
+    * depend on the arm. When the task ends, for any reason, the
+    * partition's outstanding calls are cancelled and start no retry.
     */
   def fetchDetails(
-      ids: Dataset[String], fetch: Fetcher,
-      maxRetries: Int = 3, pauseMs: Long = 0L): Dataset[Response] = {
+      ids: Dataset[String], fetch: Fetcher, maxRetries: Int = 3): Dataset[Response] = {
     import ids.sparkSession.implicits._
-    ids.mapPartitions { part =>
-      part.map { id =>
-        var attempt = 0
-        var result: Response = null
-        while (result == null) {
-          val (status, body) =
-            try fetch(id)
-            catch { case e: Exception => (599, e.getMessage) }
-          if (status == 200)
-            result = Response(id, 200, error = false, body)
-          else if (attempt >= maxRetries)
-            result = Response(id, status, error = true, body)
-          else {
-            attempt += 1
-            if (pauseMs > 0) Thread.sleep(pauseMs * attempt) // linear backoff
-          }
+    ids.mapPartitions(part => new Fetching(part, fetch, maxRetries))
+  }
+
+  private def fetchWithRetry(id: String, fetch: Fetcher, maxRetries: Int): Response = {
+    var attempt = 0
+    var result: Response = null
+    while (result == null) {
+      val (status, body) =
+        try fetch(id)
+        catch { case e: Exception => (599, e.getMessage) }
+      if (status == 200)
+        result = Response(id, 200, error = false, body)
+      else if (attempt >= maxRetries)
+        result = Response(id, status, error = true, body)
+      else attempt += 1
+    }
+    result
+  }
+
+  /** One partition's responses, in input order: probed inline, then
+    * inline or windowed on the fetch pool (see [[fetchDetails]]).
+    */
+  private final class Fetching(ids: Iterator[String], fetch: Fetcher, maxRetries: Int)
+      extends Iterator[Response] {
+    private val clock = ManagementFactory.getThreadMXBean
+    private var probed = 0
+    private var blocked = 0
+    private var window: java.util.ArrayDeque[Future[Response]] = null // null: inline
+    @volatile private var closed = false
+
+    /** Pooled calls check this before each attempt, so a cancelled id
+      * makes no further request.
+      */
+    private val guarded: Fetcher = { id =>
+      if (closed) throw new CancellationException("fetch task completed")
+      fetch(id)
+    }
+
+    def hasNext: Boolean = ids.hasNext || (window != null && !window.isEmpty)
+
+    def next(): Response =
+      if (window != null) {
+        while (window.size < MaxInFlight && ids.hasNext) {
+          val id = ids.next()
+          val call: Callable[Response] = () => fetchWithRetry(id, guarded, maxRetries)
+          window.add(fetchPool.submit(call))
         }
-        if (pauseMs > 0) Thread.sleep(pauseMs)
-        result
-      }
+        try window.poll().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      } else if (probed < ProbeCalls && clock.isCurrentThreadCpuTimeSupported) {
+        val (wall0, cpu0) = (System.nanoTime(), clock.getCurrentThreadCpuTime)
+        val r = fetchWithRetry(ids.next(), fetch, maxRetries)
+        val cpu = clock.getCurrentThreadCpuTime - cpu0
+        if (System.nanoTime() - wall0 > 4 * cpu) blocked += 1
+        probed += 1
+        if (blocked == ProbeCalls) openWindow()
+        r
+      } else fetchWithRetry(ids.next(), fetch, maxRetries)
+
+    private def openWindow(): Unit = {
+      window = new java.util.ArrayDeque[Future[Response]](MaxInFlight)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        closed = true
+        window.forEach(_.cancel(true))
+      })
     }
   }
 
@@ -169,7 +254,7 @@ object MatchPipeline {
       .filter(col("queue").isin(queues.map(Integer.valueOf): _*)) // pushed
       .select("match_id").as[String]
       .distinct() // intended A1 semantics
-      .repartition(fetchPartitions) // fetch fan-out = task parallelism
+      .repartition(fetchPartitions) // fetch tasks; a blocking fetcher overlaps more on the fetch pool
 
     val obs = new Observation("fetch_stats")
     val responses = fetchDetails(ids, f).toDF()

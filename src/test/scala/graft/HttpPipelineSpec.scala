@@ -31,6 +31,12 @@ class HttpPipelineSpec extends SparkSpec {
     val puuid = "PUUID_under_test"
     val idsRequests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val matchHits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    // planted again at positions 7 and 8 of the page 10..19, past the
+    // probe calls, so those faults are fetched on the pooled window
+    val rateLimited = Set("NA1_430_0", "NA1_430_17")
+    val broken = Set("NA1_430_1", "NA1_430_18")
+    val inflight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInflight = new java.util.concurrent.atomic.AtomicInteger
 
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
@@ -46,11 +52,14 @@ class HttpPipelineSpec extends SparkSpec {
     server.createContext("/match/", (x: HttpExchange) => {
       val id = x.getRequestURI.getPath.stripPrefix("/match/")
       val hit = matchHits.merge(id, 1, (a, b) => Integer.valueOf(a + b)).intValue
-      if (id.endsWith("_0")) {
+      maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
+      Thread.sleep(20) // service latency: the fetcher blocks, so the fetch window opens
+      inflight.decrementAndGet()
+      if (rateLimited(id)) {
         // planted rate limit: first attempt 429 + Retry-After, then 200
         if (hit == 1) respond(x, 429, "rate limited", "Retry-After" -> "0")
         else respond(x, 200, MatchPipeline.fakeFetcher(puuid)(id)._2)
-      } else if (id.endsWith("_1")) {
+      } else if (broken(id)) {
         respond(x, 500, "permanent server error") // never recovers
       } else respond(x, 200, MatchPipeline.fakeFetcher(puuid)(id)._2)
     })
@@ -88,12 +97,18 @@ class HttpPipelineSpec extends SparkSpec {
       assert(by("NA1_430_1").status == 500 && by("NA1_430_1").error)
       assert(by("NA1_430_1").payload == "permanent server error")
       assert(matchHits.get("NA1_430_1").intValue == 3) // 1 + maxRetries, bounded
-      assert(resp.count(_.status == 200) == idsPerQueue - 1)
+      // the same faults on the pooled window
+      assert(by("NA1_430_17").status == 200 && !by("NA1_430_17").error)
+      assert(matchHits.get("NA1_430_17").intValue == 2)
+      assert(by("NA1_430_18").status == 500 && by("NA1_430_18").error)
+      assert(matchHits.get("NA1_430_18").intValue == 3)
+      assert(maxInflight.get > spark.sparkContext.defaultParallelism) // the window opened
+      assert(resp.count(_.status == 200) == idsPerQueue - broken.size)
 
       // the wire documents flow through the standard transform untouched
       val flat = MatchPipeline.transform(
         graft.ops.CoreOps.statusFilter(resp.toSeq.toDF()), puuid)
-      assert(flat.count() == idsPerQueue - 1)
+      assert(flat.count() == idsPerQueue - broken.size)
       assert(flat.columns.contains("player_kills"))
     } finally server.stop(0)
   }

@@ -1,7 +1,10 @@
 package graft
 
 import graft.MatchPipeline
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -35,25 +38,87 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("transient failures are retried; permanent failures become typed error rows") {
-    val flaky = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val base = MatchPipeline.fakeFetcher(puuid)
-    val fetch: MatchPipeline.Fetcher = { id =>
-      if (id.endsWith("1")) {
-        // fails twice, then succeeds (within maxRetries=3)
-        val n = flaky.merge(id, 1, (a, b) => a + b)
-        if (n <= 2) (429, "slow down") else base(id)
-      } else if (id.endsWith("2")) (404, "not found") // permanent
-      else base(id)
+    // The same fetcher on both arms: as is (CPU-bound, inline) and behind
+    // a 20 ms sleep, which opens the fetch window; the flaky and 404 ids
+    // come after the probe calls, so on the second arm they are pooled.
+    val probe = Seq("NA1_400_0000010", "NA1_400_0000020", "NA1_400_0000030")
+    assert(probe.size == MatchPipeline.ProbeCalls)
+    val ids = probe ++ Seq("NA1_400_0000001", "NA1_400_0000002", "NA1_400_0000003",
+      "NA1_400_0000040")
+    def arm(sleepMs: Long): (Map[String, MatchPipeline.Response], Map[String, Int], Int) = {
+      val flaky = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val base = MatchPipeline.fakeFetcher(puuid)
+      val fetch: MatchPipeline.Fetcher = { id =>
+        if (id.endsWith("1")) {
+          // fails twice, then succeeds (within maxRetries=3)
+          val n = flaky.merge(id, 1, (a, b) => a + b)
+          if (n <= 2) (429, "slow down") else base(id)
+        } else if (id.endsWith("2")) (404, "not found") // permanent
+        else base(id)
+      }
+      FetchLog.reset()
+      val rs = MatchPipeline.fetchDetails(spark.sparkContext.parallelize(ids, 1).toDS(),
+        FetchLog.logged(fetch, sleepMs)).collect().map(r => r.match_id -> r).toMap
+      (rs, FetchLog.attemptsById, FetchLog.maxInflight.get)
     }
-    val ids = spark.createDataset(Seq(
-      "NA1_400_0000001", "NA1_400_0000002", "NA1_400_0000003")).repartition(1)
-    val rs = MatchPipeline.fetchDetails(ids, fetch)
-      .collect().map(r => r.match_id -> r).toMap
+    val (rs, attempts, _) = arm(0L)
 
     assert(rs("NA1_400_0000001").status == 200) // retried to success
     assert(rs("NA1_400_0000002").status == 404) // typed error row, no crash
     assert(rs("NA1_400_0000002").error)
     assert(rs("NA1_400_0000003").status == 200)
+    assert(attempts == ids.map(_ -> 1).toMap ++ Map("NA1_400_0000001" -> 3, "NA1_400_0000002" -> 4))
+
+    val (pooledRs, pooledAttempts, pooledInflight) = arm(20L)
+    assert(pooledInflight > 1) // the window opened: one partition, several calls at once
+    assert(pooledRs == rs)
+    assert(pooledAttempts == attempts)
+  }
+
+  test("a blocking fetcher overlaps calls beyond the task slots, within the pool bound, in order") {
+    val slots = spark.sparkContext.defaultParallelism
+    val ids = (0 until 160).map(i => f"NA1_400_$i%07d")
+    val base = MatchPipeline.fakeFetcher(puuid)
+    def run(fetch: MatchPipeline.Fetcher): (Seq[String], Int) = {
+      FetchLog.reset()
+      val rs = MatchPipeline.fetchDetails(spark.sparkContext.parallelize(ids, 4).toDS(), fetch)
+        .collect()
+      assert(rs.forall(r => r.status == 200 && !r.error))
+      (rs.map(_.match_id).toSeq, FetchLog.maxInflight.get)
+    }
+
+    val (order, inflight) = run(FetchLog.logged(base, sleepMs = 30L))
+    assert(order == ids) // input order within and across the 4 partitions
+    assert(inflight > slots)
+    assert(inflight <= MatchPipeline.MaxInFlight + slots)
+
+    // CPU-only: each call burns 1 ms of thread CPU and never waits
+    val spin: MatchPipeline.Fetcher = { id =>
+      val clock = java.lang.management.ManagementFactory.getThreadMXBean
+      val t0 = clock.getCurrentThreadCpuTime
+      while (clock.getCurrentThreadCpuTime - t0 < 1000000L) {}
+      base(id)
+    }
+    val (cpuOrder, cpuInflight) = run(FetchLog.logged(spin, sleepMs = 0L))
+    assert(cpuOrder == ids)
+    assert(cpuInflight <= slots) // stayed inline on the task threads
+  }
+
+  test("early stop cancels the fetch window: no call starts after the job returns") {
+    val ids = (0 until 100).map(i => f"NA1_400_$i%07d")
+    val fetch = FetchLog.logged(MatchPipeline.fakeFetcher(puuid), sleepMs = 30L)
+    // 1 row: stops during the probe; ProbeCalls + 1 rows: stops with the window open
+    Seq(1, MatchPipeline.ProbeCalls + 1).foreach { n =>
+      FetchLog.reset()
+      val rs = MatchPipeline.fetchDetails(spark.sparkContext.parallelize(ids, 1).toDS(), fetch)
+        .limit(n).collect()
+      val returned = System.nanoTime()
+      assert(rs.map(_.match_id).toSeq == ids.take(n))
+      Thread.sleep(300)
+      val started = FetchLog.startedNs.asScala.toSeq
+      assert(started.size <= MatchPipeline.ProbeCalls + MatchPipeline.MaxInFlight)
+      assert(started.forall(_ <= returned), s"${started.count(_ > returned)} calls after return")
+    }
   }
 
   test("documents not containing the player are skipped (reference logs+skips)") {
@@ -85,5 +150,30 @@ class PipelineSpec extends SparkSpec {
       }.collect().toSet
     // users present on either side appear exactly once, absent side empty
     assert(out == Set((1L, 2, 9.5), (2L, 1, 0.0), (3L, 0, 5.0)))
+  }
+}
+
+/** Every call the logged fetchers of these specs make. Tasks and the fetch
+  * pool run in this JVM (local master), so statics see each call, pooled
+  * or inline.
+  */
+object FetchLog {
+  private val attempts = new ConcurrentHashMap[String, AtomicInteger]()
+  val startedNs = new ConcurrentLinkedQueue[java.lang.Long]()
+  private val inflight = new AtomicInteger
+  val maxInflight = new AtomicInteger
+
+  def reset(): Unit = { attempts.clear(); startedNs.clear(); maxInflight.set(0) }
+  def attemptsById: Map[String, Int] = attempts.asScala.map { case (k, v) => k -> v.get }.toMap
+
+  /** `f` behind a `sleepMs` sleep, with each call logged. */
+  def logged(f: MatchPipeline.Fetcher, sleepMs: Long): MatchPipeline.Fetcher = { id =>
+    attempts.computeIfAbsent(id, _ => new AtomicInteger).incrementAndGet()
+    startedNs.add(System.nanoTime())
+    maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
+    try {
+      if (sleepMs > 0) Thread.sleep(sleepMs)
+      f(id)
+    } finally inflight.decrementAndGet()
   }
 }
