@@ -11,7 +11,9 @@ import org.apache.spark.sql.types._
 /** The reference application, end-to-end, as one declarative Spark job
   * (zwilson999/lol_data_pipeline `pipeline.py` `main()`, SURVEY.md §3.1):
   *
-  *   id scan (graft.sources.MatchIdsSource, queue pushdown)
+  *   id scan (graft.sources.MatchIdsSource, queue pushdown; its pages
+  *     are packed into at most leaf-node-parallelism tasks, each reading
+  *     its pages in order)
   *     → distinct ids (matches.py:46-48 — *intended* semantics; the
   *       reference computes the set then returns the pre-dedup list)
   *     → throttled per-partition detail fetch with bounded retry and
@@ -24,6 +26,10 @@ import org.apache.spark.sql.types._
   *
   * Metrics that the reference printed as log lines are Spark
   * `Observation`s — computed inside the job, no extra pass, cluster-safe.
+  * `loaded` is observed on the deduped frame the sink writes, so it is
+  * the row count the load committed (the reference logs the length of
+  * the rows it hands to `insert_many`, db.py:34,38), without reading the
+  * output back.
   *
   * The detail "fetch" is a pluggable function; the default fabricates a
   * deterministic match document per ID (zero-egress container). An HTTP
@@ -263,12 +269,14 @@ object MatchPipeline {
         sum(when(col("status") === 200, 1L).otherwise(0L)).as("ok"))
     val okRows = CoreOps.statusFilter(responses)
 
+    val loadObs = new Observation("load_stats")
     val flat = transform(okRows, puuid).dropDuplicates("match_id")
+      .observe(loadObs, count(lit(1)).as("loaded"))
     CoreOps.truncateLoad(flat, outPath)
 
-    val loaded = spark.read.parquet(outPath).count()
     val fetched = obs.get("fetched").asInstanceOf[Long]
     val ok = obs.get("ok").asInstanceOf[Long]
+    val loaded = loadObs.get("loaded").asInstanceOf[Long]
     Metrics(fetched, ok, fetched - ok, loaded)
   }
 }

@@ -29,7 +29,8 @@ object HttpClients {
 /** Paged match-ID pages over HTTP: GET `baseUrl/ids?queue=&start=&count=`
   * returning a JSON array of id strings — the DSv2 source's pushdown
   * (queue subset, page windows) lands verbatim in these query params,
-  * one GET per planned InputPartition. JSON via Spark's own jackson.
+  * one GET per planned page; each InputPartition issues its pages' GETs
+  * in order. JSON via Spark's own jackson.
   */
 class HttpMatchIdClient(val queues: Seq[Int], baseUrl: String) extends MatchIdClient {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -49,10 +50,13 @@ object FakeMatchIdClient {
   *    (`?count=` + page cap). Partial push (`pushLimit` returns false):
   *    Spark still applies the exact global limit on top.
   *
-  * One InputPartition per (queue, page): at cluster scale each page fetch
-  * runs as its own task — the DSv2 analog of the reference's semaphore
-  * fan-out (`pipeline.py:49-58`), with retries/pacing delegated to the
-  * client implementation.
+  * The (queue, page) requests are packed into at most
+  * `spark.sql.leafNodeDefaultParallelism` contiguous, balanced
+  * InputPartitions (`SparkContext.defaultParallelism` when unset) — the
+  * rule Spark applies to its own leaf scans (`range`, local relations).
+  * Each partition makes one client and fetches its pages in order, the
+  * next page only when the reader needs its rows, so a pushed LIMIT still
+  * stops early. Retries/pacing are delegated to the client implementation.
   *
   * Usage: `spark.read.format("graft.sources.MatchIdsSource")
   *   .option("queues", "400,430,450").option("idsPerQueue", 1000).load()`
@@ -94,9 +98,13 @@ class MatchIdsTable(options: CaseInsensitiveStringMap) extends Table with Suppor
   override def schema(): StructType = MatchIdsSource.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new MatchIdsScanBuilder(MatchIdsSource.conf(options),
-      opts.getInt("pageSize", 100), opts.getInt("maxPerQueue", 1000))
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
+    val pageSize = opts.getInt("pageSize", 100)
+    val maxPerQueue = opts.getInt("maxPerQueue", 1000)
+    require(pageSize > 0, s"option pageSize must be > 0, got $pageSize")
+    require(maxPerQueue >= 0, s"option maxPerQueue must be >= 0, got $maxPerQueue")
+    new MatchIdsScanBuilder(MatchIdsSource.conf(options), pageSize, maxPerQueue)
+  }
 }
 
 class MatchIdsScanBuilder(conf: MatchIdsSource.ClientConf, pageSize: Int, maxPerQueue: Int)
@@ -135,7 +143,11 @@ class MatchIdsScanBuilder(conf: MatchIdsSource.ClientConf, pageSize: Int, maxPer
   }
 }
 
-case class MatchIdsPartition(queue: Int, start: Int, count: Int) extends InputPartition
+/** One `?queue=&start=&count=` page request. */
+case class MatchIdsPage(queue: Int, start: Int, count: Int)
+
+/** A contiguous run of page requests, read in order by one task. */
+case class MatchIdsPartition(pages: Seq[MatchIdsPage]) extends InputPartition
 
 class MatchIdsScan(
     conf: MatchIdsSource.ClientConf, queues: Seq[Int],
@@ -149,9 +161,16 @@ class MatchIdsScan(
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val pages = (0 until perQueueCap by pageSize)
-    queues.flatMap(q => pages.map(start =>
-      MatchIdsPartition(q, start, math.min(pageSize, perQueueCap - start)))).toArray
+    val starts = 0 until perQueueCap by pageSize
+    val pages = queues.flatMap(q => starts.map(start =>
+      MatchIdsPage(q, start, math.min(pageSize, perQueueCap - start)))).toIndexedSeq
+    val spark = SparkSession.active
+    val slots = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    val n = math.min(pages.size, slots)
+    // split i takes pages [i*P/n, (i+1)*P/n): sizes differ by at most one
+    (0 until n).map(i => MatchIdsPartition(
+      pages.slice((i.toLong * pages.size / n).toInt, ((i + 1L) * pages.size / n).toInt))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -159,11 +178,14 @@ class MatchIdsScan(
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[MatchIdsPartition]
       new PartitionReader[InternalRow] {
-        private val ids = c.make().fetchPage(p.queue, p.start, p.count).iterator
-        private var current: String = _
-        override def next(): Boolean = { val h = ids.hasNext; if (h) current = ids.next(); h }
-        override def get(): InternalRow =
-          InternalRow(p.queue, UTF8String.fromString(current))
+        private val client = c.make()
+        // flatMap fetches the next page only once the current one is drained
+        private val rows = p.pages.iterator.flatMap(pg =>
+          client.fetchPage(pg.queue, pg.start, pg.count).iterator
+            .map(id => InternalRow(pg.queue, UTF8String.fromString(id))))
+        private var current: InternalRow = _
+        override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
+        override def get(): InternalRow = current
         override def close(): Unit = ()
       }
     }

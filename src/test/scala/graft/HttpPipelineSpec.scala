@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * serves the fixture pages and match documents, a real
   * `java.net.http.HttpClient` fetches them from executor tasks, and the
   * server's request log proves what actually crossed the wire —
-  * pushdown params in the query string, one GET per planned partition,
+  * pushdown params in the query string, one GET per planned page,
   * a scripted 429 + Retry-After driving the bounded-retry path, and a
   * persistent 500 driving the typed-error path
   * (reference `matches.py:30-40`, `pipeline.py:49-80`).
@@ -78,7 +78,7 @@ class HttpPipelineSpec extends SparkSpec {
 
       // pushdown proof, from the server's own log: the pruned queue 400
       // never crossed the wire, and the page windows arrived as
-      // start/count params — one GET per planned partition
+      // start/count params — one GET per planned page
       val qs = idsRequests.asScala.toSeq
       assert(qs.nonEmpty && qs.forall(_.contains("queue=430")))
       assert(!qs.exists(_.contains("queue=400")))

@@ -26,6 +26,45 @@ class MatchIdsSourceSpec extends SparkSpec {
     assert(n == 30)
   }
 
+  test("pages pack into at most defaultParallelism splits, each page fetched once") {
+    val df = source()
+    assert(df.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    var ids: Array[String] = Array.empty
+    val n = fetchesDuring {
+      ids = df.select("match_id").as[String].collect()
+    }
+    assert(n == 30, s"expected 30 page fetches, got $n")
+    assert(ids.length == 3000)
+    assert(ids.toSet ==
+      (for (q <- Seq(400, 430, 450); i <- 0 until 1000) yield f"NA1_$q%03d_$i%07d").toSet)
+  }
+
+  test("spark.sql.leafNodeDefaultParallelism sets the split count") {
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+    try {
+      val df = source()
+      assert(df.rdd.getNumPartitions == 1)
+      val n = fetchesDuring {
+        assert(df.count() == 3000)
+      }
+      assert(n == 30, s"expected 30 page fetches, got $n")
+    } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+  }
+
+  test("pageSize <= 0 and maxPerQueue < 0 are rejected, naming the option") {
+    def scan(opt: String, v: Int): DataFrame =
+      spark.read.format("graft.sources.MatchIdsSource")
+        .option("queues", "400").option(opt, v).load()
+    Seq("pageSize" -> 0, "pageSize" -> -100, "maxPerQueue" -> -1).foreach { case (opt, v) =>
+      val e = intercept[IllegalArgumentException](scan(opt, v).count())
+      assert(e.getMessage.contains(opt), e.getMessage)
+    }
+    val n = fetchesDuring {
+      assert(scan("maxPerQueue", 0).count() == 0)
+    }
+    assert(n == 0)
+  }
+
   test("queue predicate is pushed: only that queue's pages are fetched") {
     var rows: Array[(Int, String)] = Array.empty
     val n = fetchesDuring {

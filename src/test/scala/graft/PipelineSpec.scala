@@ -128,6 +128,25 @@ class PipelineSpec extends SparkSpec {
     assert(MatchPipeline.transform(rs, puuid).count() == 0)
   }
 
+  test("loaded is the row count the load committed: skipped players and typed errors") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe3").toString + "/m"
+    val mine = MatchPipeline.fakeFetcher(puuid)
+    val other = MatchPipeline.fakeFetcher("SOMEBODY_ELSE")
+    val fetch: MatchPipeline.Fetcher = { id =>
+      if (id == "NA1_400_0000007") (500, "permanent server error")
+      else if (id.endsWith("0")) other(id) // the queried player is not in it
+      else mine(id)
+    }
+    val m = MatchPipeline.run(spark, puuid, Seq(400), idsPerQueue = 40, outPath = out,
+      fetch = fetch)
+    assert(m.fetched == 40)
+    assert(m.rejected == 1)
+    assert(m.ok == 39)
+    assert(m.loaded == spark.read.parquet(out).count())
+    assert(m.loaded < m.ok)
+    assert(m.loaded == 35) // 39 ok minus the 4 documents without the player
+  }
+
   test("truncate-reload: a second run fully replaces the first") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe2").toString + "/m"
     MatchPipeline.run(spark, puuid, Seq(400), idsPerQueue = 50, outPath = out)
