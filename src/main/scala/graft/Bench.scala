@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times SparkEntry.headline on
   * SPARK_GRAFT_SF_DIR, printing one JSON line.
   *
@@ -47,6 +45,13 @@ import org.apache.spark.sql.SparkSession
   *     (unmeasurable this sweep, NOT regressed) instead of silently
   *     reporting a poisoned min; when quiet runs exist, the reported
   *     min is taken over THOSE.
+  *
+  * A run whose query throws is FAILED: it is left out of the min, the
+  * corroboration check and the total, and the query is named in the
+  * "failed" list of both total lines. Each detail entry also carries the
+  * [[RunMetrics]] window of the run that backs its min: jobs, stages,
+  * tasks, summed task run and CPU seconds, input bytes and shuffle
+  * write/read bytes. The counters are read after the timer stops.
   */
 object Bench {
   private def loadavg(): String =
@@ -90,6 +95,39 @@ object Bench {
     if (ownRate < 0) -1.0 else math.max(0.0, load1() - ownRate)
   }
 
+  /** One timed run: wall seconds, ambient load at its start, whether the
+    * query completed, and the listener counters of its window. */
+  private[graft] final case class Run(
+      sec: Double, amb: Double, ok: Boolean, m: RunMetrics.Counters)
+
+  // the min is "corroborated" when the two fastest completed runs agree
+  // within 2x — a single lucky fast run under ambient load proves nothing
+  private[graft] def corroborated(rs: Seq[Run]): Boolean = {
+    val s = rs.filter(_.ok).map(_.sec).sorted
+    s.length >= 2 && s(0) > 0 && s(1) / s(0) <= 2.0
+  }
+
+  // ambient gate: a run is "quiet" when the box's load MINUS our own
+  // JVM's trailing-minute CPU rate is at or under the gate; -1 means
+  // the estimate is unavailable (young history / no bean) and the run
+  // is treated as quiet rather than poisoning the sweep
+  private[graft] def quiet(r: Run, gate: Double): Boolean =
+    r.amb < 0 || r.amb <= gate
+
+  /** The runs a query's reported min is taken over: the completed QUIET
+    * runs when any exist (the gate's whole point — a poisoned fast run
+    * must not win), all completed runs otherwise (best observable,
+    * flagged noisy). Failed runs never count. */
+  private[graft] def pool(rs: Seq[Run], gate: Double): Seq[Run] = {
+    val done = rs.filter(_.ok)
+    val q = done.filter(quiet(_, gate))
+    if (q.nonEmpty) q else done
+  }
+
+  /** The run that backs the reported min; None when every run failed. */
+  private[graft] def backing(rs: Seq[Run], gate: Double): Option[Run] =
+    pool(rs, gate).minByOption(_.sec)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -106,14 +144,10 @@ object Bench {
     // headline sweep is unaffected).
     val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS",
       if (benchAll) "2" else "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val metrics = RunMetrics.install(spark)
 
     // r20 (verdict item 2): a sweep that STARTS under ambient pressure
     // stays poisoned — the per-query gate can only re-queue a few times,
@@ -155,34 +189,29 @@ object Bench {
         if (benchAll) catalog.keys.toSeq.sorted else SparkEntry.benchHeadline)
     val (known, unknown) = selected.partition(catalog.contains)
     unknown.foreach(n => System.err.println(s"[bench] unknown query '$n' skipped"))
-    // the min is "corroborated" when the two fastest runs agree within
-    // 2x — a single lucky fast run under ambient load proves nothing
-    def corroborated(rs: Seq[Double]): Boolean = {
-      val s = rs.sorted
-      s.length >= 2 && s(0) > 0 && s(1) / s(0) <= 2.0
-    }
-    // ambient gate: a run is "quiet" when the box's load MINUS our own
-    // JVM's trailing-minute CPU rate is at or under the gate; -1 means
-    // the estimate is unavailable (young history / no bean) and the run
-    // is treated as quiet rather than poisoning the sweep
     val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
-    def quietRun(amb: Double): Boolean = amb < 0 || amb <= loadGate
     // per-sweep budget for the r20 sleep-before-requeue (seconds)
     var gateSleepBudget = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_GATE_SLEEP_SEC", "180").toInt
     val results = known.map { name =>
       val fn = catalog(name)
       val qLoad = load1()
-      def once(): (Double, Double) = {
+      def once(): Run = {
         val amb = ambientLoad()
+        val before = metrics.snapshot()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        ((System.nanoTime() - t0) / 1e9, amb)
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false }
+        val sec = (System.nanoTime() - t0) / 1e9
+        Run(sec, amb, ok, metrics.snapshot() - before)
       }
       var runs = (1 to runsPerQuery).map(_ => once())
+      // a failed query gets no extra runs: its timings back nothing
+      def retry = runsPerQuery > 1 && runs.forall(_.ok)
       var extra = 0
-      while (runsPerQuery > 1 && extra < 2 && !corroborated(runs.map(_._1))) {
+      while (retry && extra < 2 && !corroborated(runs)) {
         runs = runs :+ once()
         extra += 1
       }
@@ -194,7 +223,7 @@ object Bench {
       // lands in the same noise window) — bounded by a per-SWEEP budget
       // so a box that stays loaded cannot stall the artifact.
       var gateExtra = 0
-      while (runsPerQuery > 1 && gateExtra < 2 && !runs.exists(r => quietRun(r._2))) {
+      while (retry && gateExtra < 2 && !runs.exists(quiet(_, loadGate))) {
         val nap = math.min(20, gateSleepBudget)
         if (nap > 0) { Thread.sleep(nap * 1000L); gateSleepBudget -= nap }
         runs = runs :+ once()
@@ -208,28 +237,33 @@ object Bench {
     // the JSON artifact.
     def fmt(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def fmt2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    // reported min per query: over the QUIET runs when any exist (the
-    // gate's whole point — a poisoned fast run must not win), over all
-    // runs otherwise (best observable, flagged noisy below)
-    def reportedMin(rs: Seq[(Double, Double)]): Double = {
-      val quiet = rs.filter(r => quietRun(r._2))
-      (if (quiet.nonEmpty) quiet else rs).map(_._1).min
-    }
-    val detail = results.map { case (k, rs, qLoad) =>
-      "\"" + k + "\":{\"min\":" + fmt(reportedMin(rs)) +
-        ",\"max\":" + fmt(rs.map(_._1).max) +
+    def str(s: String): String = "\"" + s + "\""
+    // a query whose every run failed has no reported min: it is left out
+    // of the detail map, the queries map and the total, and named below
+    val measured = results.flatMap { case (k, rs, qLoad) =>
+      backing(rs, loadGate).map(b => (k, rs.filter(_.ok), qLoad, b)) }
+    val failed = results.collect { case (k, rs, _) if rs.exists(!_.ok) => str(k) }
+    val detail = measured.map { case (k, done, qLoad, b) =>
+      val m = b.m
+      str(k) + ":{\"min\":" + fmt(b.sec) +
+        ",\"max\":" + fmt(done.map(_.sec).max) +
         ",\"load\":" + fmt2(qLoad) +
-        ",\"runs\":[" + rs.map(r => fmt(r._1)).mkString(",") + "]" +
-        ",\"amb\":[" + rs.map(r => fmt2(r._2)).mkString(",") + "]}"
+        ",\"runs\":[" + done.map(r => fmt(r.sec)).mkString(",") + "]" +
+        ",\"amb\":[" + done.map(r => fmt2(r.amb)).mkString(",") + "]" +
+        Seq("jobs" -> m.jobs.toString, "stages" -> m.stages.toString,
+          "tasks" -> m.tasks.toString, "task_run_s" -> fmt(m.runMs / 1e3),
+          "task_cpu_s" -> fmt(m.cpuNs / 1e9), "input_bytes" -> m.inputBytes.toString,
+          "shuffle_write_bytes" -> m.shuffleWriteBytes.toString,
+          "shuffle_read_bytes" -> m.shuffleReadBytes.toString)
+          .map { case (f, v) => "," + str(f) + ":" + v }.mkString + "}"
     }.mkString("{", ",", "}")
-    // noisy = uncorroborated min OR every run above the ambient gate —
-    // either way the number is unmeasurable this sweep, not regressed
-    val noisy = results.collect {
-      case (k, rs, _) if runsPerQuery > 1 &&
-        (!corroborated(rs.map(_._1)) || !rs.exists(r => quietRun(r._2))) =>
-        "\"" + k + "\""
-    }.mkString("[", ",", "]")
-    val total = results.map(r => reportedMin(r._2)).sum
+    // noisy = uncorroborated min OR no completed run under the ambient
+    // gate — either way the number is unmeasurable this run, not regressed
+    val noisy = measured.collect {
+      case (k, done, _, _) if runsPerQuery > 1 &&
+        (!corroborated(done) || !done.exists(quiet(_, loadGate))) => str(k)
+    }
+    val total = measured.map(_._4.sec).sum
 
     // Artifact contract: the driver captures only the LAST ~2000 chars of
     // stdout, so the FINAL line must be a complete compact JSON object —
@@ -255,19 +289,19 @@ object Bench {
       results.map(_._3).foldLeft(-1.0)(math.max))
     // max ambient across the runs that BACKED a reported min — the one
     // figure that says whether any committed number ran under pressure
-    val maxQAmbient = fmt2(results.flatMap { case (_, rs, _) =>
-      val quiet = rs.filter(r => quietRun(r._2))
-      (if (quiet.nonEmpty) quiet else rs).map(_._2)
-    }.foldLeft(-1.0)(math.max))
-    val fullTotalLine = s"""{"metric":"total","value":${fmt(total)},""" +
-      s""""unit":"sec","runs_per_query":$runsPerQuery,"noisy":$noisy,""" +
+    val maxQAmbient = fmt2(results.flatMap(r => pool(r._2, loadGate).map(_.amb))
+      .foldLeft(-1.0)(math.max))
+    def prefix(failedNames: Seq[String]): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+      s""""runs_per_query":$runsPerQuery,"noisy":${noisy.mkString("[", ",", "]")},""" +
+      s""""failed":${failedNames.mkString("[", ",", "]")},""" +
       s""""max_q_load":$maxQLoad,"max_q_ambient":$maxQAmbient,""" +
       s""""load_gate":${fmt2(loadGate)},"quiet_wait_sec":$quietWaited,""" +
       s""""loadavg_before":"$loadBefore","loadavg_after":"$loadAfter",""" +
-      s""""sf":"$sfDir","queries":{""" +
-      results.sortBy(r => -reportedMin(r._2))
-        .map { case (k, rs, _) => "\"" + k + "\":" + fmt(reportedMin(rs)) }
-        .mkString(",") + "}}"
+      s""""sf":"$sfDir","queries":{"""
+    val entries = measured.sortBy(r => -r._4.sec)
+      .map { case (k, _, _, b) => str(k) + ":" + fmt(b.sec) }
+    val fullTotalLine = prefix(failed) + entries.mkString(",") + "}}"
     val detailOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "bench_detail_last.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailOut),
@@ -275,18 +309,21 @@ object Bench {
         .getBytes("UTF-8"))
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] detail file $detailOut not written: $e") }
-    val prefix = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs_per_query":$runsPerQuery,"noisy":$noisy,"max_q_load":$maxQLoad,"max_q_ambient":$maxQAmbient,"load_gate":${fmt2(loadGate)},"quiet_wait_sec":$quietWaited,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir","queries":{"""
-    val budget = 1800 - prefix.length - 40 // slack for the closing + omitted count
-    val entries = results.sortBy(r => -reportedMin(r._2))
-      .map { case (k, rs, _) => "\"" + k + "\":" + fmt(reportedMin(rs)) }
-    // strict slowest-first prefix: stop at the FIRST entry that doesn't
+    // strict prefix of what fits: stop at the FIRST entry that doesn't
     // fit — skipping it but keeping later (shorter) ones would silently
     // drop a slow query with a long name while keeping faster ones
-    val kept = entries.to(LazyList)
+    def fit(es: Seq[String], budget: Int): Vector[String] = es.to(LazyList)
       .scanLeft(("", 0)) { case ((_, used), e) => (e, used + e.length + 1) }
       .drop(1).takeWhile(_._2 <= budget).map(_._1).toVector
+    // failed names come before the mins on the final line; a mass failure
+    // keeps the first names that fit in 600 chars plus a "+N more" marker
+    val keptFailed = fit(failed, 600)
+    val finalPrefix = prefix(
+      if (keptFailed.length == failed.length) failed
+      else keptFailed :+ str(s"+${failed.length - keptFailed.length} more"))
+    val kept = fit(entries, 1800 - finalPrefix.length - 40) // slack for the closing + omitted count
     val omitted = entries.length - kept.length
-    println(prefix + kept.mkString(",") + s"""},"queries_omitted":$omitted}""")
+    println(finalPrefix + kept.mkString(",") + s"""},"queries_omitted":$omitted}""")
     spark.stop()
   }
 }

@@ -2734,7 +2734,7 @@ object TextQueries {
       // Candidate-id prune (r21, guide §3.2): the est/exact arms only
       // read signature and shingle rows of docs that appear in a
       // candidate PAIR, yet the joins below shuffled the FULL corpus
-      // frames (sh is the biggest frame of the query — OptProbe r21
+      // frames (sh is the biggest frame of the query — OPTIMIZATION_r21.md
       // attributed the residual cost and the 0.41 8→32c scaling ratio
       // to exactly these two doc-id exchanges). cand is checkpointed,
       // so the id list is cheap to count; under the same measured ≤8M

@@ -69,12 +69,15 @@ class AnnIndexSpec extends SparkSpec {
           records.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
     rawIdx // force the one-time build OUTSIDE the counted window
+    // listener delivery is async: drain the bus before the window opens
+    // (the build's events stay out) and before the count is read (every
+    // construction job's tasks are in)
+    org.apache.spark.GraftSparkBridge.drainListeners(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
       val df = AnnIndex.ivfTopK(e.filter(col("vec_id") < 50), rawIdx, k = 5)
       df.queryExecution.executedPlan // plan fully, still no execution
-      // listener delivery is async; a short settle keeps the count honest
-      Thread.sleep(500)
+      org.apache.spark.GraftSparkBridge.drainListeners(spark)
       val n = records.get()
       // nlist (16) centroids + 1 meta row, with headroom well below
       // the 500-row corpus a hidden training scan would read

@@ -24,13 +24,22 @@ trustworthy" is answerable from the table alone.
 A mover must be BOTH >1.3x and >0.2 s absolute (under quiet minima the
 old 0.4 s floor hid real sub-second regressions; loads are already
 gated, so the tighter floor is safe).
+
+Detail lines that carry Bench's listener figures (jobs, input_bytes,
+shuffle_write_bytes of the run behind each entry's min) add one line
+under each mover with both sides' figures, taken from the entry with the
+lowest min on each side; a side without them prints nothing extra.
 """
 import json
 import sys
 
 
+FIGURES = ("jobs", "input_bytes", "shuffle_write_bytes")
+
+
 def load(path):
-    """Return ({query: [(sec, amb), ...]}, total, noisy_set, load_gate)."""
+    """Return ({query: [(sec, amb), ...]}, total, noisy_set, load_gate,
+    {query: (min, {figure: value})})."""
     text = open(path).read()
     # driver artifact wrapper: the captured stdout tail (with embedded
     # JSON lines) lives under "tail", the parsed final line under
@@ -42,7 +51,7 @@ def load(path):
                 wrapper.get("parsed") or {})
     except json.JSONDecodeError:
         pass
-    runs, total, noisy, gate = {}, None, set(), 2.0
+    runs, total, noisy, gate, figs = {}, None, set(), 2.0, {}
     for line in text.splitlines():
         line = line.strip()
         i = line.find("{")
@@ -60,6 +69,8 @@ def load(path):
                     rs = v.get("runs", [v.get("min")])
                     ambs = v.get("amb", [-1.0] * len(rs))
                     runs.setdefault(q, []).extend(zip(rs, ambs))
+                    if all(f in v for f in FIGURES):
+                        figs[q] = (v.get("min"), {f: v[f] for f in FIGURES})
                 else:
                     runs.setdefault(q, []).append((v, -1.0))
         if d.get("metric") == "total" or "queries" in d:
@@ -69,20 +80,24 @@ def load(path):
             for q, v in d.get("queries", {}).items():
                 # final-line numbers only when no detail line supplied runs
                 runs.setdefault(q, []).append((v, -1.0))
-    return runs, total, noisy, gate
+    return runs, total, noisy, gate, figs
 
 
 def merge(paths):
     """Pool runs from several files; per query return (quiet_min, amb_of_min,
-    had_quiet). noisy propagates only if NO file measured the query quietly.
+    had_quiet, figures or None). noisy propagates only if NO file measured
+    the query quietly.
     Quiet-classification happens against EACH FILE'S OWN load gate (ADVICE
     r19: pooling files produced under different SPARK_GRAFT_BENCH_LOAD_GATE
     values must not admit a load-poisoned min against the wrong gate)."""
-    pooled, noisy_votes, measured = {}, {}, set()
+    pooled, noisy_votes, measured, figs = {}, {}, set(), {}
     total = None
     for p in paths:
-        runs, t, noisy, g = load(p)
+        runs, t, noisy, g, f = load(p)
         total = t if total is None else min(total, t)
+        for q, (m, fig) in f.items():
+            if q not in figs or m < figs[q][0]:
+                figs[q] = (m, fig)
         for q, rs in runs.items():
             # tag each run quiet/not against THIS file's gate
             pooled.setdefault(q, []).extend(
@@ -95,8 +110,17 @@ def merge(paths):
         quiet = [r for r in rs if r[2]]
         src = quiet if quiet else rs
         sec, amb, _ = min(src, key=lambda r: r[0])
-        out[q] = (sec, amb, bool(quiet))
+        out[q] = (sec, amb, bool(quiet), figs.get(q, (None, None))[1])
     return out, total
+
+
+def size(b):
+    """Bytes in a short human unit."""
+    for unit in ("B", "KB", "MB"):
+        if abs(b) < 1024:
+            return f"{b:.0f} {unit}" if unit == "B" else f"{b:.1f} {unit}"
+        b /= 1024
+    return f"{b:.1f} GB"
 
 
 def main(argv):
@@ -136,6 +160,12 @@ def main(argv):
         print(f"{tag:10s} {q:30s} {a[q][0]:7.2f} -> {b[q][0]:7.2f}  "
               f"({ratio:5.2f}x, {delta:+.2f}s)  "
               f"amb {a[q][1]:.2f} -> {b[q][1]:.2f}{extra}")
+        fa, fb = a[q][3], b[q][3]
+        if fa and fb:
+            print(f"{'':10s} {'':30s} jobs {fa['jobs']} -> {fb['jobs']}  "
+                  f"input {size(fa['input_bytes'])} -> {size(fb['input_bytes'])}  "
+                  f"shuffle_write {size(fa['shuffle_write_bytes'])} -> "
+                  f"{size(fb['shuffle_write_bytes'])}")
     only_new = sorted(set(b) - set(a))
     if only_new:
         slow = [q for q in only_new if b[q][0] > 2.0]
