@@ -50,8 +50,8 @@ package graft
   * corroboration check and the total, and the query is named in the
   * "failed" list of both total lines. Each detail entry also carries the
   * [[RunMetrics]] window of the run that backs its min: jobs, stages,
-  * tasks, summed task run and CPU seconds, input bytes and shuffle
-  * write/read bytes. The counters are read after the timer stops.
+  * tasks, summed task run and CPU seconds, and shuffle write/read
+  * bytes. The counters are read after the timer stops.
   */
 object Bench {
   private def loadavg(): String =
@@ -252,7 +252,7 @@ object Bench {
         ",\"amb\":[" + done.map(r => fmt2(r.amb)).mkString(",") + "]" +
         Seq("jobs" -> m.jobs.toString, "stages" -> m.stages.toString,
           "tasks" -> m.tasks.toString, "task_run_s" -> fmt(m.runMs / 1e3),
-          "task_cpu_s" -> fmt(m.cpuNs / 1e9), "input_bytes" -> m.inputBytes.toString,
+          "task_cpu_s" -> fmt(m.cpuNs / 1e9),
           "shuffle_write_bytes" -> m.shuffleWriteBytes.toString,
           "shuffle_read_bytes" -> m.shuffleReadBytes.toString)
           .map { case (f, v) => "," + str(f) + ":" + v }.mkString + "}"

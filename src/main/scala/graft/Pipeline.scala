@@ -116,6 +116,9 @@ object MatchPipeline {
     */
   private[graft] val ProbeCalls = 3
 
+  /** Partitions [[run]] spreads the deduped ids over for the fetch. */
+  private val FetchPartitions = 8
+
   private lazy val fetchPool: ExecutorService =
     Executors.newFixedThreadPool(MaxInFlight, { r: Runnable =>
       val t = new Thread(r, "graft-fetch")
@@ -249,7 +252,7 @@ object MatchPipeline {
     */
   def run(
       spark: SparkSession, puuid: String, queues: Seq[Int], idsPerQueue: Int,
-      outPath: String, fetch: Fetcher = null, fetchPartitions: Int = 8): Metrics = {
+      outPath: String, fetch: Fetcher = null): Metrics = {
     import spark.implicits._
     val f = Option(fetch).getOrElse(fakeFetcher(puuid))
 
@@ -260,7 +263,7 @@ object MatchPipeline {
       .filter(col("queue").isin(queues.map(Integer.valueOf): _*)) // pushed
       .select("match_id").as[String]
       .distinct() // intended A1 semantics
-      .repartition(fetchPartitions) // fetch tasks; a blocking fetcher overlaps more on the fetch pool
+      .repartition(FetchPartitions) // fetch tasks; a blocking fetcher overlaps more on the fetch pool
 
     val obs = new Observation("fetch_stats")
     val responses = fetchDetails(ids, f).toDF()

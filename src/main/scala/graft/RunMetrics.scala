@@ -16,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   * listener bus, so a window counts every task of the jobs it ran and
   * nothing of the next one. Task figures are summed from task-end
   * metrics: run time (ms) and CPU time (ns) as the executor reports them,
-  * bytes read by scans, and shuffle bytes written and read (local plus
-  * remote).
+  * and shuffle bytes written and read (local plus remote). Bytes scanned
+  * are not counted: parquet's vectored reads bypass the Hadoop FS
+  * statistics that task input metrics come from.
   */
 final class RunMetrics private (spark: SparkSession) extends SparkListener {
   import RunMetrics.Counters
@@ -37,7 +38,6 @@ final class RunMetrics private (spark: SparkSession) extends SparkListener {
       tasks = 1,
       runMs = m.executorRunTime,
       cpuNs = m.executorCpuTime,
-      inputBytes = m.inputMetrics.bytesRead,
       shuffleWriteBytes = m.shuffleWriteMetrics.bytesWritten,
       shuffleReadBytes = m.shuffleReadMetrics.totalBytesRead))
   }
@@ -51,11 +51,11 @@ final class RunMetrics private (spark: SparkSession) extends SparkListener {
 object RunMetrics {
   final case class Counters(
       jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
-      runMs: Long = 0, cpuNs: Long = 0, inputBytes: Long = 0,
+      runMs: Long = 0, cpuNs: Long = 0,
       shuffleWriteBytes: Long = 0, shuffleReadBytes: Long = 0) {
     private def zip(o: Counters, f: (Long, Long) => Long) = Counters(
       f(jobs, o.jobs), f(stages, o.stages), f(tasks, o.tasks),
-      f(runMs, o.runMs), f(cpuNs, o.cpuNs), f(inputBytes, o.inputBytes),
+      f(runMs, o.runMs), f(cpuNs, o.cpuNs),
       f(shuffleWriteBytes, o.shuffleWriteBytes),
       f(shuffleReadBytes, o.shuffleReadBytes))
     def +(o: Counters): Counters = zip(o, _ + _)

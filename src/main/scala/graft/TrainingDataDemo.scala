@@ -123,17 +123,17 @@ object TrainingDataDemo {
 
     // 6. layout maintenance — compact each split's leaf dir (the
     // per-partition unit LayoutOps.compactFiles documents) so training
-    // readers open ~targetFileBytes files, not one file per write task
+    // readers open ~targetFileBytes files, not one file per write task;
+    // CoreOps.commitSwap moves the compacted copy in without deleting
+    // the only complete leaf first
     val reclaimed = Seq("train", "heldout").map { s =>
       val leaf = s"$outDir/split=$s"
       if (new java.io.File(leaf).exists()) {
+        val (live, staged, old) = graft.ops.CoreOps.siblings(leaf)
         val st = graft.ops.LayoutOps.compactFiles(
-          spark, leaf, leaf + ".cpct", 128L << 20)
-        // swap the compacted leaf in (single-writer demo; the marker
-        // protocol lives in the sink/index tiers)
-        graft.ops.LocalFs.deleteTree(java.nio.file.Paths.get(leaf))
-        java.nio.file.Files.move(java.nio.file.Paths.get(leaf + ".cpct"),
-          java.nio.file.Paths.get(leaf))
+          spark, leaf, staged.toString, 128L << 20)
+        graft.ops.CoreOps.commitSwap(graft.ops.CoreOps.fsOf(spark, leaf),
+          live, staged, old, "TrainingDataDemo")
         st.filesIn - st.filesOut
       } else 0
     }.sum

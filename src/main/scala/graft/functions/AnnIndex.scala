@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.ops.CoreOps
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -238,7 +240,7 @@ object AnnIndex {
       idCol: String = "vec_id", vecCol: String = "embedding",
       attrCols: Seq[String] = Nil): Boolean = {
     val spark = newVectors.sparkSession
-    recoverVacuum(dir) // ledger read AFTER recovery (the maintain lesson)
+    recoverVacuum(spark, dir) // ledger read AFTER recovery (the maintain lesson)
     if (batchId <= lastAppendedBatch(dir)) return false
     val assigned = assignForAppend(newVectors, dir, idCol, vecCol, attrCols)
     val all = spark.read.parquet(postingsPath(dir)).unionByName(assigned)
@@ -268,16 +270,11 @@ object AnnIndex {
     * Probe results are identical before and after (spec-pinned) — this
     * reclaims bytes and removes the per-probe anti-join, nothing else.
     * Single-writer maintenance operation (the standard compaction
-    * contract). The swap extends [[graft.ops.CoreOps.upsert]]'s crash
-    * discipline with a RENAME-ASIDE: the staged rewrite gets a
-    * `_GRAFT_COMMIT` marker strictly after its write returns, the live
-    * postings are atomically renamed aside (never tree-deleted while
-    * they are the only complete copy), and every crash window is
-    * recovered (or surfaced loudly) by [[recoverVacuum]] on the next
-    * probe or vacuum. Returns the number of rows removed.
+    * contract), committed through [[stageAndSwapPostings]]. Returns the
+    * number of rows removed.
     */
   def vacuum(spark: SparkSession, dir: String): Long = {
-    recoverVacuum(dir)
+    recoverVacuum(spark, dir)
     val tPath = java.nio.file.Paths.get(tombstonesPath(dir))
     if (!java.nio.file.Files.exists(tPath)) return 0L
     val tombs = spark.read.parquet(tombstonesPath(dir))
@@ -285,7 +282,7 @@ object AnnIndex {
     val before = postings.count()
     val after = stageAndSwapPostings(spark, dir,
       postings.join(tombs, Seq("n_id"), "left_anti"))
-    deleteTree(tPath)
+    graft.ops.LocalFs.deleteTree(tPath)
     before - after
   }
 
@@ -301,7 +298,7 @@ object AnnIndex {
     * number of data files reclaimed.
     */
   def compactPostings(spark: SparkSession, dir: String): Long = {
-    recoverVacuum(dir)
+    recoverVacuum(spark, dir)
     def nFiles = graft.ops.LayoutOps.listParquet(postingsPath(dir)).length
     val before = nFiles
     stageAndSwapPostings(spark, dir,
@@ -309,32 +306,23 @@ object AnnIndex {
     before - nFiles
   }
 
-  /** Shared staged rewrite + commit-marker swap for the maintenance
-    * operations ([[vacuum]], [[compactPostings]], [[reassignPostings]]):
-    * write the new postings to staging, mark complete strictly after the
-    * write returns, then swap via RENAME-ASIDE — the live postings dir
-    * is atomically moved to `postings_old`, staging atomically moved in,
-    * then the old copy deleted. No step ever deletes the only complete
-    * copy: a crash at any point leaves either the old postings in place
-    * (staging rebuilt next call), or a finished/finishable swap that
-    * [[recoverVacuum]] completes (move staged in, drop the old copy).
-    * A rewrite that would leave the index EMPTY is refused — a fully
-    * purged index should be dropped, not served as an unreadable dir.
-    * The swap section shares [[recoverVacuum]]'s monitor so an in-JVM
-    * probe's recovery check cannot interleave with a half-done swap
-    * (cross-JVM, maintenance stays single-writer by contract).
-    * Returns the staged row count.
+  /** Shared staged rewrite for the maintenance operations ([[vacuum]],
+    * [[compactPostings]], [[reassignPostings]], [[appendBatch]]): write
+    * the new postings to `postings_staged`, then commit them through
+    * [[swap]]. A rewrite that would leave the index EMPTY is refused — a
+    * fully purged index should be dropped, not served as an unreadable
+    * dir. Returns the staged row count.
     */
   private def stageAndSwapPostings(
       spark: SparkSession, dir: String, rewritten: DataFrame,
       extraStagedFiles: Map[String, String] = Map.empty): Long = {
-    val staged = stagedPath(dir)
+    val staged = swapPaths(dir, "postings")._2.toString
     rewritten.write.mode("overwrite").partitionBy("cell").parquet(staged)
     // explicit schema: an all-rows-removed staged dir has no parquet
     // files to infer from (the count must still work to refuse below)
     val after = spark.read.schema(rewritten.schema).parquet(staged).count()
     if (after == 0L) {
-      deleteTree(java.nio.file.Paths.get(staged))
+      graft.ops.LocalFs.deleteTree(java.nio.file.Paths.get(staged))
       throw new IllegalStateException(
         s"AnnIndex($dir): rewrite would remove every posting — an empty " +
           "index is unreadable; drop the index directory instead")
@@ -350,79 +338,41 @@ object AnnIndex {
         case -1L => extraStagedFiles
         case id => extraStagedFiles + (AppendLedger -> id.toString)
       }
-    carried.foreach { case (name, contents) =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(staged, name), contents.getBytes("UTF-8"))
-    }
-    // marker strictly after the staged write returns: a crash before it
-    // leaves staging unmarked (and postings intact) — the next
-    // maintenance call just rebuilds staging
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(staged, graft.ops.CoreOps.CommitMarker))
-    synchronized {
-      val postings = java.nio.file.Paths.get(postingsPath(dir))
-      val old = java.nio.file.Paths.get(oldPath(dir))
-      deleteTree(old) // leftover from an interrupted prior swap
-      java.nio.file.Files.move(postings, old)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staged), postings)
-      deleteTree(old)
-    }
+    swap(spark, dir, "postings", carried)
     after
   }
 
-  private def stagedPath(dir: String) = s"$dir/postings_staged"
-  private def oldPath(dir: String) = s"$dir/postings_old"
+  /** `dir/<table>` with its `_staged` and `_old` swap siblings. */
+  private def swapPaths(dir: String, table: String): (Path, Path, Path) =
+    (new Path(s"$dir/$table"), new Path(s"$dir/${table}_staged"),
+      new Path(s"$dir/${table}_old"))
 
-  /** Finish an interrupted maintenance swap. With the rename-aside
-    * discipline every crash state is recoverable:
-    *  - postings present: drop any leftover `postings_old` / unmarked
-    *    staging debris (a COMPLETE staged dir next to live postings just
-    *    waits for the next maintenance call to rebuild it — never swap
-    *    it in here, its tombstone set may be stale).
-    *  - postings missing + staged COMPLETE (marker or `_SUCCESS`):
-    *    the between-moves crash — finish the move, drop the old copy.
-    *  - postings missing + no complete staging + `postings_old` present:
-    *    crash after the rename-aside with staging somehow unusable —
-    *    restore the old copy verbatim.
-    *  - none of the above: genuinely unrecoverable, fail loudly.
-    * Tombstones possibly left behind by an interrupted [[vacuum]] are
-    * harmless: the rewritten postings no longer hold those ids, so the
-    * anti-join is a no-op and the next vacuum clears them.
+  /** Commit the fully written `dir/<table>_staged` through
+    * [[graft.ops.CoreOps.commitSwap]]. The swap holds [[recoverVacuum]]'s
+    * monitor so an in-JVM probe's recovery check cannot interleave with
+    * a half-done swap (cross-JVM, maintenance stays single-writer by
+    * contract).
     */
-  private def recoverVacuum(dir: String): Unit = synchronized {
-    recoverSwap(dir, what = "postings",
-      live = postingsPath(dir), staged = stagedPath(dir), old = oldPath(dir))
-    recoverSwap(dir, what = "centroids",
-      live = centroidsPath(dir), staged = s"$dir/centroids_staged",
-      old = s"$dir/centroids_old")
+  private def swap(spark: SparkSession, dir: String, table: String,
+      sidecars: Map[String, String] = Map.empty): Unit = synchronized {
+    val (live, staged, old) = swapPaths(dir, table)
+    CoreOps.commitSwap(CoreOps.fsOf(spark, dir), live, staged, old,
+      s"AnnIndex($dir)", sidecars)
   }
 
-  /** One rename-aside recovery (see [[recoverVacuum]]'s case list). */
-  private def recoverSwap(
-      dir: String, what: String,
-      live: String, staged: String, old: String): Unit = {
-    val livePath = java.nio.file.Paths.get(live)
-    val stagedPath = java.nio.file.Paths.get(staged)
-    val oldPath = java.nio.file.Paths.get(old)
-    if (java.nio.file.Files.exists(livePath)) {
-      deleteTree(oldPath)
-      return
-    }
-    if (!java.nio.file.Files.exists(stagedPath) &&
-        !java.nio.file.Files.exists(oldPath)) return // index never built
-    val stagedComplete = java.nio.file.Files.exists(stagedPath) &&
-      (java.nio.file.Files.exists(
-        stagedPath.resolve(graft.ops.CoreOps.CommitMarker)) ||
-        java.nio.file.Files.exists(stagedPath.resolve("_SUCCESS")))
-    if (stagedComplete) {
-      java.nio.file.Files.move(stagedPath, livePath)
-      deleteTree(oldPath)
-    } else if (java.nio.file.Files.exists(oldPath)) {
-      java.nio.file.Files.move(oldPath, livePath)
-    } else {
-      throw new IllegalArgumentException(
-        s"AnnIndex($dir): $what missing and staging is incomplete " +
-          s"(no ${graft.ops.CoreOps.CommitMarker}) — manual inspection required")
+  /** Finish an interrupted postings or centroids swap through
+    * [[graft.ops.CoreOps.recoverSwap]]. A COMPLETE staged dir next to
+    * live postings is left for the next maintenance call to rebuild —
+    * never swapped in here, its tombstone set may be stale. Tombstones
+    * possibly left behind by an interrupted [[vacuum]] are harmless: the
+    * rewritten postings no longer hold those ids, so the anti-join is a
+    * no-op and the next vacuum clears them.
+    */
+  private def recoverVacuum(spark: SparkSession, dir: String): Unit = synchronized {
+    val fs = CoreOps.fsOf(spark, dir)
+    Seq("postings", "centroids").foreach { table =>
+      val (live, staged, old) = swapPaths(dir, table)
+      CoreOps.recoverSwap(fs, live, staged, old, s"AnnIndex($dir)")
     }
   }
 
@@ -432,13 +382,10 @@ object AnnIndex {
     */
   private[graft] def storedCentroids(
       spark: SparkSession, dir: String): Array[Seq[Double]] = {
-    recoverVacuum(dir)
+    recoverVacuum(spark, dir)
     spark.read.parquet(centroidsPath(dir))
       .orderBy("cell").select("centroid").collect().map(_.getSeq[Double](0))
   }
-
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    graft.ops.LocalFs.deleteTree(root)
 
   /** Postings minus the tombstone set — what every probe reads. The
     * anti-join only appears in the plan while tombstones exist (between
@@ -451,7 +398,7 @@ object AnnIndex {
     * micro-batch like any static side).
     */
   private[graft] def livePostings(spark: SparkSession, dir: String): DataFrame = {
-    recoverVacuum(dir)
+    recoverVacuum(spark, dir)
     val postings = spark.read.parquet(postingsPath(dir))
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(tombstonesPath(dir))))
       // no broadcast hint: file-size stats pick broadcast for the
@@ -480,22 +427,15 @@ object AnnIndex {
       .select(col("n_id").as("vec_id"), col("n_vec").as("embedding"))
     val cents = VectorOps.kMeansCentroids(corpus, nlist, rounds)
     import spark.implicits._
-    // staged + rename-aside, like the postings swaps: an in-place
-    // overwrite of the LIVE centroid table would brick the index on a
-    // mid-write crash (Spark's overwrite deletes first). The tiny table
-    // makes the window small, not acceptable.
-    val staged = s"$dir/centroids_staged"
+    // staged + swapped like the postings: an in-place overwrite of the
+    // LIVE centroid table would brick the index on a mid-write crash
+    // (Spark's overwrite deletes first). The tiny table makes the window
+    // small, not acceptable.
+    val (_, staged, _) = swapPaths(dir, "centroids")
     cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(staged)
-    synchronized {
-      val live = java.nio.file.Paths.get(centroidsPath(dir))
-      val old = java.nio.file.Paths.get(s"$dir/centroids_old")
-      deleteTree(old)
-      java.nio.file.Files.move(live, old)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staged), live)
-      deleteTree(old)
-    }
+      .coalesce(1).write.mode("overwrite").parquet(staged.toString)
+    swap(spark, dir, "centroids")
   }
 
   /** Index-staleness audit: per stored cell, how many live postings rows
@@ -529,7 +469,7 @@ object AnnIndex {
     * with the same quantizers (spec-pinned).
     */
   def reassignPostings(spark: SparkSession, dir: String): Unit = {
-    recoverVacuum(dir)
+    recoverVacuum(spark, dir)
     val dim = spark.read.parquet(metaPath(dir)).head().getAs[Int]("dim")
     val cents = storedCentroids(spark, dir)
     val flat = lit(cents.flatten.toArray)
@@ -537,7 +477,7 @@ object AnnIndex {
       livePostings(spark, dir).withColumn("cell",
         call_function("graft_nearest_cell", col("n_vec"), flat, lit(dim))))
     val tPath = java.nio.file.Paths.get(tombstonesPath(dir))
-    if (java.nio.file.Files.exists(tPath)) deleteTree(tPath)
+    graft.ops.LocalFs.deleteTree(tPath)
   }
 
   /** Most recent ensureDrifted()'d index root — q_ann_index_drift's
@@ -561,7 +501,7 @@ object AnnIndex {
     // measuring nothing. A missing marker rebuilds from scratch.
     val root = ensureCopy(sfDir, "graft_ann_index_drift", ensuredDrift)(
       r => marker(s"$r/_GRAFT_RETRAINED")) { r =>
-      deleteTree(java.nio.file.Paths.get(r))
+      graft.ops.LocalFs.deleteTree(java.nio.file.Paths.get(r))
       build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0, trainRounds = 0)
       retrainCentroids(s, r, rounds = 2)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$r/_GRAFT_RETRAINED"))

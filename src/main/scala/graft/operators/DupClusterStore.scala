@@ -133,10 +133,6 @@ object DupClusterStore {
 
   private val ensuredInc = scala.collection.mutable.Map.empty[String, String]
 
-  private def fsOf(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
   /** Recover BOTH swap scopes: the whole-root swap (build/retract) and
     * the assign-table swap (maintain's commit unit). Safe no-op on a
     * fresh or healthy store.
@@ -151,7 +147,7 @@ object DupClusterStore {
     * crash between the appends and the assign swap stay invisible.
     */
   private def tableParts(s: SparkSession, root: String, name: String): Seq[String] = {
-    val fs = fsOf(s, root)
+    val fs = graft.ops.CoreOps.fsOf(s, root)
     val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
     if (!fs.exists(dir)) return Seq.empty
     val led = lastBatch(root)
@@ -183,7 +179,7 @@ object DupClusterStore {
     * replay is idempotent.
     */
   private def cleanOrphans(s: SparkSession, root: String): Unit = {
-    val fs = fsOf(s, root)
+    val fs = graft.ops.CoreOps.fsOf(s, root)
     val led = lastBatch(root)
     AppendTables.foreach { name =>
       val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
@@ -622,66 +618,40 @@ object DupClusterStore {
   }
 
   /** Whole-root staged swap: `build` writes every table into
-    * `root.staging`, the ledger (when given) and the commit marker land
-    * strictly after, then rename-aside commits — one atomic visibility
-    * event for the whole store, recovered by
-    * [[graft.ops.CoreOps.recoverSwap]]'s case list.
+    * `root.staging`, and [[graft.ops.CoreOps.commitSwap]] commits it
+    * with the ledger (when given, or carried forward) as its
+    * `assign/_GRAFT_LAST_BATCH` sidecar — one visibility event for the
+    * whole store.
     */
   private def swapRoot(
       s: SparkSession, root: String, batchId: Option[Long])(
       build: String => Unit): Unit = {
-    val fs = fsOf(s, root)
-    val target = new org.apache.hadoop.fs.Path(root)
-    val staging = new org.apache.hadoop.fs.Path(root + ".staging")
-    val oldAside = new org.apache.hadoop.fs.Path(root + ".old")
+    val fs = graft.ops.CoreOps.fsOf(s, root)
+    val (live, staging, old) = graft.ops.CoreOps.siblings(root)
     fs.delete(staging, true)
     build(staging.toString)
     // carry the ledger forward on ledgerless rewrites (the AnnIndex /
     // SummaryTables rule: losing it would re-admit replayed ids); the
     // ledger lives INSIDE assign/ (r20 — it flips with the assignment)
     val ledger = batchId.orElse(Some(lastBatch(root)).filter(_ >= 0))
-    ledger.foreach { id =>
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(staging, s"assign/$Ledger"), true)
-      out.write(id.toString.getBytes("UTF-8"))
-      out.close()
-    }
-    fs.create(new org.apache.hadoop.fs.Path(
-      staging, graft.ops.CoreOps.CommitMarker), true).close()
-    if (fs.exists(oldAside)) fs.delete(oldAside, true)
-    if (fs.exists(target))
-      require(fs.rename(target, oldAside),
-        s"DupClusterStore($root): rename-aside failed")
-    require(fs.rename(staging, target),
-      s"DupClusterStore($root): staging rename failed")
-    fs.delete(oldAside, true)
+    graft.ops.CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore",
+      ledger.map(id => s"assign/$Ledger" -> id.toString).toMap)
   }
 
   /** Maintain's commit unit (r20): stage the new assignment next to the
-    * live one, put the advanced ledger and the commit marker inside the
-    * staged bytes, rename-aside — the store's single visibility event,
-    * recovered by [[graft.ops.CoreOps.recoverSwap]] on `root/assign`.
+    * live one and commit it through [[graft.ops.CoreOps.commitSwap]]
+    * with the advanced ledger as its sidecar — the store's single
+    * visibility event.
     */
   private def swapAssign(
       s: SparkSession, root: String, batchId: Long)(assignNew: DataFrame): Unit = {
-    val fs = fsOf(s, root)
-    val target = new org.apache.hadoop.fs.Path(s"$root/assign")
-    val staging = new org.apache.hadoop.fs.Path(s"$root/assign.staging")
-    val oldAside = new org.apache.hadoop.fs.Path(s"$root/assign.old")
+    val fs = graft.ops.CoreOps.fsOf(s, root)
+    val (live, staging, old) = graft.ops.CoreOps.siblings(s"$root/assign")
     fs.delete(staging, true)
     // the plan still READS root/assign — fully materialize to staging
     // first (hash-spread layout, no single-task coalesce)
     assignNew.repartition(col("gid")).write.parquet(staging.toString)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, Ledger), true)
-    out.write(batchId.toString.getBytes("UTF-8"))
-    out.close()
-    fs.create(new org.apache.hadoop.fs.Path(
-      staging, graft.ops.CoreOps.CommitMarker), true).close()
-    if (fs.exists(oldAside)) fs.delete(oldAside, true)
-    require(fs.rename(target, oldAside),
-      s"DupClusterStore($root): assign rename-aside failed")
-    require(fs.rename(staging, target),
-      s"DupClusterStore($root): assign staging rename failed")
-    fs.delete(oldAside, true)
+    graft.ops.CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore",
+      Map(Ledger -> batchId.toString))
   }
 }

@@ -512,7 +512,6 @@ object SummaryTables {
         maxColsBase.map { case (b, p) => max(col(b)).as(s"__d_$p") }
     val deltas = feed.groupBy(groupKeys.map(col): _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
-    // swapCore, not stagedSwapRewrite: recovery already ran above
     graft.ops.CoreOps.swapCore(spark, summaryPath,
         "SummaryTables.maintain",
         extraStagedFiles = ledgerEntry) { old =>

@@ -193,7 +193,7 @@ object ChangeFeed {
 
   /** [[applyFeed]] against a PERSISTED keyed table: the state at `path`
     * is rewritten to `applyFeed(state, feed, keys)` through
-    * [[CoreOps.stagedSwapRewrite]]'s stage-then-swap (commit marker,
+    * [[CoreOps.swapCore]]'s stage-then-swap (commit marker,
     * rename-aside, crash recovery on the next call) — the downstream
     * materialization a CDC consumer maintains. Applying one
     * self-consistent feed is IDEMPOTENT (the anti-join removes a key
@@ -228,9 +228,7 @@ object ChangeFeed {
     // the target missing but restorable — bootstrapping over it would
     // clobber the recoverable state
     CoreOps.recoverSwap(spark, path, "applyFeedToTable")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
+    if (!CoreOps.fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
       incoming.drop("change_type").write.mode("overwrite").parquet(path)
     else CoreOps.swapCore(spark, path, "applyFeedToTable") {
       state => applyFeed(state, feed, keys)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -181,21 +182,9 @@ object CoreOps {
     * writers externally; a transactional table format is the real answer
     * for multi-writer.
     *
-    * Crash windows, all recovered or surfaced loudly on the NEXT call
-    * (staging completeness = our `_GRAFT_COMMIT` marker, written after
-    * the staging write returns; Spark's `_SUCCESS` is also accepted for
-    * staging dirs a pre-marker version left behind). The swap is
-    * RENAME-ASIDE (target → `.old`, staging → target, drop `.old`), so
-    * the live table is never deleted while it is the only complete copy:
-    *  - during staging write → target intact, staging partial (no
-    *    marker): stale staging is overwritten by the next merge.
-    *  - after staging write, before the rename-aside → both exist: same
-    *    as above (the next merge re-derives staging from the target).
-    *  - between the two renames → target missing, staging complete
-    *    (marker present): recovered by finishing the rename (the `.old`
-    *    copy is dropped).
-    *  - after the second rename, before the `.old` delete → target
-    *    intact: `.old` debris dropped on the next call.
+    * The merge is written to the `.staging` sibling and committed by
+    * [[commitSwap]]; a crash at any point is recovered or surfaced
+    * loudly by [[recoverSwap]] on the NEXT call.
     */
   def upsert(updates: DataFrame, path: String,
       key: String, version: String): Unit = {
@@ -221,106 +210,107 @@ object CoreOps {
     }
   }
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery for the keyed-table swaps (rename-aside discipline,
-    * same as the AnnIndex maintenance swaps): the live table is never
-    * deleted while it is the only complete copy — the swap renames it
-    * to a `.old` sibling first, so every crash state is either
-    * recoverable here or loudly refused. Completeness of staging is
-    * keyed on our OWN commit marker, written after the staging write
-    * returns: Spark's _SUCCESS marker exists only when
-    * mapreduce.fileoutputcommitter.marksuccessfuljobs is on (off is a
-    * common object-store setting), so relying on it would turn this
-    * self-healing path into a hard failure under that config. A
-    * PRESENT _SUCCESS is still trustworthy evidence (the committer only
-    * writes it on job completion), so it is accepted too — staging dirs
-    * left by a pre-marker version of this code stay recoverable.
-    *  - target present: drop `.old` debris from an interrupted swap.
-    *  - target missing + staging COMPLETE: finish the rename, drop old.
-    *  - target missing + `.old` present (staging incomplete/absent):
-    *    restore the old copy verbatim.
-    *  - target missing + unmarked staging only: unrecoverable — fail
-    *    loudly rather than silently overwrite.
+  /** `path` with its fixed `.staging` and `.old` swap siblings. */
+  private[graft] def siblings(path: String): (Path, Path, Path) =
+    (new Path(path), new Path(path + ".staging"), new Path(path + ".old"))
+
+  /** [[recoverSwap]] over `path` and its `.staging`/`.old` siblings —
+    * the keyed tables' and the summary tier's layout.
     */
   private[graft] def recoverSwap(spark: SparkSession, path: String, op: String): Unit = {
-    val fs = fsOf(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    val oldAside = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(target)) {
-      if (fs.exists(oldAside)) fs.delete(oldAside, true)
-    } else if (fs.exists(staging) &&
-        (fs.exists(new org.apache.hadoop.fs.Path(staging, CommitMarker)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS")))) {
-      require(fs.rename(staging, target),
-        s"$op($path): recovery rename $staging -> $target failed")
-      if (fs.exists(oldAside)) fs.delete(oldAside, true)
-    } else if (fs.exists(oldAside)) {
-      require(fs.rename(oldAside, target),
-        s"$op($path): recovery restore $oldAside -> $target failed")
-    } else if (fs.exists(staging)) {
+    val (live, staged, old) = siblings(path)
+    recoverSwap(fsOf(spark, path), live, staged, old, op)
+  }
+
+  /** Crash recovery for [[commitSwap]]: every state a crash can leave is
+    * either finished here or loudly refused, because the swap never
+    * deletes the live copy while it is the only complete one.
+    * Completeness of `staged` is keyed on our OWN [[CommitMarker]],
+    * written after the staging write returns: Spark's _SUCCESS marker
+    * exists only when mapreduce.fileoutputcommitter.marksuccessfuljobs
+    * is on (off is a common object-store setting), so relying on it
+    * would turn this self-healing path into a hard failure under that
+    * config. A PRESENT _SUCCESS is still trustworthy evidence (the
+    * committer only writes it on job completion), so it is accepted too
+    * — staging dirs left by a pre-marker version of this code stay
+    * recoverable.
+    *  - live present: drop `old` debris from an interrupted swap (a
+    *    complete `staged` next to it waits for the next writer, which
+    *    re-derives it from the live copy).
+    *  - live missing + staged COMPLETE: the between-renames crash —
+    *    finish the rename, drop old.
+    *  - live missing + `old` present (staged incomplete/absent):
+    *    restore the old copy verbatim.
+    *  - live missing + unmarked staged only: unrecoverable — fail
+    *    loudly rather than silently overwrite.
+    *  - none of the three exists: never built, nothing to do.
+    */
+  private[graft] def recoverSwap(
+      fs: FileSystem, live: Path, staged: Path, old: Path, op: String): Unit =
+    if (fs.exists(live)) {
+      if (fs.exists(old)) fs.delete(old, true)
+    } else if (fs.exists(staged) &&
+        (fs.exists(new Path(staged, CommitMarker)) ||
+          fs.exists(new Path(staged, "_SUCCESS")))) {
+      require(fs.rename(staged, live), s"$op($live): recovery rename $staged -> $live failed")
+      if (fs.exists(old)) fs.delete(old, true)
+    } else if (fs.exists(old)) {
+      require(fs.rename(old, live), s"$op($live): recovery restore $old -> $live failed")
+    } else if (fs.exists(staged)) {
       require(requirement = false,
-        s"$op($path): target missing and staging $staging is " +
+        s"$op($live): target missing and staging $staged is " +
           s"incomplete (no $CommitMarker) — manual inspection required")
     }
-  }
 
-  /** Rewrite the keyed table at `path` as `f(current)` through the
-    * stage-then-swap protocol shared by [[upsert]] and
-    * [[graft.ops.ChangeFeed.applyFeedToTable]]: the rewritten plan
-    * still READS `path`, so it is fully written to a staging sibling
-    * first. The commit marker lands strictly AFTER the write returns —
-    * a crash before it leaves staging unmarked (and the target intact),
-    * so the next call rebuilds staging instead of trusting partial
-    * data. The swap renames the live table ASIDE instead of deleting
-    * it: a recursive delete is not atomic, and a crash mid-delete would
-    * leave a PARTIAL target that the missing-target recovery check
-    * cannot see — rename-aside keeps a complete copy at every step.
-    * Runs [[recoverSwap]] first, so standalone callers self-heal.
-    * SINGLE WRITER REQUIRED, like [[upsert]].
+  /** The one staged-directory commit every store here uses: `staged` is
+    * fully written by the caller; its `sidecars` (name relative to
+    * `staged` -> UTF-8 contents, e.g. a stream's applied-batch ledger)
+    * land next, then the [[CommitMarker]], so data, sidecars and marker
+    * become visible together or not at all. The swap renames `live`
+    * ASIDE to `old` (when it exists — a first build has none), renames
+    * `staged` in, then drops `old`: a recursive delete is not atomic,
+    * and a crash mid-delete would leave a PARTIAL live copy that
+    * [[recoverSwap]] cannot see, so the live copy is never deleted while
+    * it is the only complete one. SINGLE WRITER REQUIRED: fixed staging
+    * names make recovery deterministic (exactly one place a
+    * completed-but-unswapped write can live); in-JVM readers that must
+    * not see the gap between the two renames hold the caller's monitor.
     */
-  private[graft] def stagedSwapRewrite(spark: SparkSession, path: String,
-      op: String, extraStagedFiles: Map[String, String] = Map.empty)(
-      f: DataFrame => DataFrame): Unit = {
-    recoverSwap(spark, path, op)
-    swapCore(spark, path, op, extraStagedFiles)(f)
+  private[graft] def commitSwap(
+      fs: FileSystem, live: Path, staged: Path, old: Path, op: String,
+      sidecars: Map[String, String] = Map.empty): Unit = {
+    sidecars.foreach { case (name, content) =>
+      val out = fs.create(new Path(staged, name), true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    fs.create(new Path(staged, CommitMarker), true).close()
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(live))
+      require(fs.rename(live, old), s"$op($live): rename-aside $live -> $old failed")
+    require(fs.rename(staged, live), s"$op($live): rename $staged -> $live failed")
+    fs.delete(old, true)
   }
 
-  /** [[stagedSwapRewrite]] minus the recovery pass — for callers that
-    * already ran [[recoverSwap]] this call (upsert's fresh-table branch
-    * decision, deleteWhere's match counting): recovery probes the
-    * filesystem up to 4 times, and on an object store each exists() is
-    * a billable round trip on the hot path.
+  /** Rewrite the keyed table at `path` as `f(current)` through
+    * [[commitSwap]] with the `.staging`/`.old` siblings: the rewritten
+    * plan still READS `path`, so it is fully written to staging first.
+    * `extraStagedFiles` are the swap's sidecars. Runs no recovery — the
+    * callers ([[upsert]], [[deleteWhere]],
+    * [[graft.ops.ChangeFeed.applyFeedToTable]], the summary tier) ran
+    * [[recoverSwap]] already this call, and on an object store each of
+    * its exists() probes is a billable round trip on the hot path.
     */
   private[graft] def swapCore(spark: SparkSession, path: String,
       op: String, extraStagedFiles: Map[String, String] = Map.empty)(
       f: DataFrame => DataFrame): Unit = {
     val fs = fsOf(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    val oldAside = new org.apache.hadoop.fs.Path(path + ".old")
-    require(fs.exists(target), s"$op($path): no table at $path")
-    val rewritten = f(spark.read.parquet(path))
-    rewritten.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // sidecar files (e.g. a stream's applied-batch ledger) ride the SAME
-    // atomic swap as the data — written after the table, BEFORE the
-    // marker, so they are either visible together with the rewrite or
-    // not at all (the exactly-once anchor for replayed feeds)
-    extraStagedFiles.foreach { case (name, content) =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, name), true)
-      out.write(content.getBytes("UTF-8"))
-      out.close()
-    }
-    fs.create(new org.apache.hadoop.fs.Path(staging, CommitMarker), true).close()
-    if (fs.exists(oldAside)) fs.delete(oldAside, true)
-    require(fs.rename(target, oldAside),
-      s"$op($path): rename-aside $target -> $oldAside failed")
-    require(fs.rename(staging, target),
-      s"$op($path): rename $staging -> $target failed")
-    fs.delete(oldAside, true)
+    val (live, staged, old) = siblings(path)
+    require(fs.exists(live), s"$op($path): no table at $path")
+    f(spark.read.parquet(path)).write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    commitSwap(fs, live, staged, old, op, extraStagedFiles)
   }
 
   /** Marker proving a staging write ran to completion (see [[upsert]]). */

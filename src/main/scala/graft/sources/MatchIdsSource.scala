@@ -56,7 +56,9 @@ object FakeMatchIdClient {
   * rule Spark applies to its own leaf scans (`range`, local relations).
   * Each partition makes one client and fetches its pages in order, the
   * next page only when the reader needs its rows, so a pushed LIMIT still
-  * stops early. Retries/pacing are delegated to the client implementation.
+  * stops early; after a queue's short (last) page it requests none of
+  * that queue's remaining pages. Retries/pacing are delegated to the
+  * client implementation.
   *
   * Usage: `spark.read.format("graft.sources.MatchIdsSource")
   *   .option("queues", "400,430,450").option("idsPerQueue", 1000).load()`
@@ -179,10 +181,15 @@ class MatchIdsScan(
       val p = partition.asInstanceOf[MatchIdsPartition]
       new PartitionReader[InternalRow] {
         private val client = c.make()
-        // flatMap fetches the next page only once the current one is drained
-        private val rows = p.pages.iterator.flatMap(pg =>
-          client.fetchPage(pg.queue, pg.start, pg.count).iterator
-            .map(id => InternalRow(pg.queue, UTF8String.fromString(id))))
+        // queues whose last page this split has seen (a short page)
+        private val ended = scala.collection.mutable.Set.empty[Int]
+        // flatMap fetches the next page only once the current one is
+        // drained, so `ended` is current when the filter looks at it
+        private val rows = p.pages.iterator.filterNot(pg => ended(pg.queue)).flatMap { pg =>
+          val ids = client.fetchPage(pg.queue, pg.start, pg.count)
+          if (ids.size < pg.count) ended += pg.queue
+          ids.iterator.map(id => InternalRow(pg.queue, UTF8String.fromString(id)))
+        }
         private var current: InternalRow = _
         override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
         override def get(): InternalRow = current

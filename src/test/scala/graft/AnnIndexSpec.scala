@@ -447,6 +447,47 @@ class AnnIndexSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(staged))
   }
 
+  test("retrain marks its centroid swap: the between-renames crash finishes without _SUCCESS") {
+    // object stores often run with _SUCCESS off; the swap's own commit
+    // marker must then be the staged table's completeness evidence
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prev = Option(hconf.get(key))
+    hconf.setBoolean(key, false)
+    try {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_annidx_retrain").toString
+      AnnIndex.build(e, dir, nlist = 0, trainRounds = 0)
+      val live = java.nio.file.Paths.get(s"$dir/centroids")
+      val pre = java.nio.file.Paths.get(s"$dir/centroids_pre")
+      val st = java.nio.file.Files.walk(live)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.foreach { p =>
+          java.nio.file.Files.copy(p, pre.resolve(live.relativize(p).toString))
+        }
+      } finally st.close()
+      AnnIndex.retrainCentroids(spark, dir, rounds = 2)
+      assert(java.nio.file.Files.exists(
+        live.resolve(graft.ops.CoreOps.CommitMarker)))
+      assert(!java.nio.file.Files.exists(live.resolve("_SUCCESS")))
+      def misassigned = AnnIndex.driftStats(spark, dir)
+        .agg(sum(col("n_misassigned"))).head().getLong(0)
+      val want = misassigned
+      assert(want > 0L, "the retrained centroids should drift from the stored cells")
+      // crash between the swap's renames: the retrained table sits as
+      // staging, the pre-retrain copy sits aside, no live table
+      val staged = java.nio.file.Paths.get(s"$dir/centroids_staged")
+      val old = java.nio.file.Paths.get(s"$dir/centroids_old")
+      java.nio.file.Files.move(live, staged)
+      java.nio.file.Files.move(pre, old)
+      // the next read finishes the swap: it sees the retrained centroids
+      assert(misassigned == want)
+      assert(java.nio.file.Files.exists(live) &&
+        !java.nio.file.Files.exists(staged) && !java.nio.file.Files.exists(old))
+    } finally prev.fold(hconf.unset(key))(hconf.set(key, _))
+  }
+
   test("vacuum refuses to leave an empty (unreadable) index behind") {
     import spark.implicits._
     val dir = java.nio.file.Files

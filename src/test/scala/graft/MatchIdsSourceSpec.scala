@@ -51,6 +51,20 @@ class MatchIdsSourceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
   }
 
+  test("a queue's scan stops at its short last page") {
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+    try {
+      val df = spark.read.format("graft.sources.MatchIdsSource")
+        .option("queues", "400,430").option("idsPerQueue", 100).load()
+      val n = fetchesDuring {
+        assert(df.count() == 200)
+      }
+      // the default cap plans 10 pages per queue; page 0 is full and
+      // page 1 comes back empty, so each queue stops after 2 requests
+      assert(n == 4, s"expected 4 page fetches, got $n")
+    } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+  }
+
   test("pageSize <= 0 and maxPerQueue < 0 are rejected, naming the option") {
     def scan(opt: String, v: Int): DataFrame =
       spark.read.format("graft.sources.MatchIdsSource")

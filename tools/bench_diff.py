@@ -25,7 +25,7 @@ A mover must be BOTH >1.3x and >0.2 s absolute (under quiet minima the
 old 0.4 s floor hid real sub-second regressions; loads are already
 gated, so the tighter floor is safe).
 
-Detail lines that carry Bench's listener figures (jobs, input_bytes,
+Detail lines that carry Bench's listener figures (jobs and
 shuffle_write_bytes of the run behind each entry's min) add one line
 under each mover with both sides' figures, taken from the entry with the
 lowest min on each side; a side without them prints nothing extra.
@@ -34,7 +34,7 @@ import json
 import sys
 
 
-FIGURES = ("jobs", "input_bytes", "shuffle_write_bytes")
+FIGURES = ("jobs", "shuffle_write_bytes")
 
 
 def load(path):
@@ -163,7 +163,6 @@ def main(argv):
         fa, fb = a[q][3], b[q][3]
         if fa and fb:
             print(f"{'':10s} {'':30s} jobs {fa['jobs']} -> {fb['jobs']}  "
-                  f"input {size(fa['input_bytes'])} -> {size(fb['input_bytes'])}  "
                   f"shuffle_write {size(fa['shuffle_write_bytes'])} -> "
                   f"{size(fb['shuffle_write_bytes'])}")
     only_new = sorted(set(b) - set(a))
