@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.ops.CoreOps
+import graft.ops.{ContentTag, CoreOps}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -128,8 +128,6 @@ object AnnIndex {
     Seq((dim, effNlist, nprobe, dsub, kEff, m, cb.toSeq))
       .toDF("dim", "nlist", "nprobe", "dsub", "ksub_eff", "m", "flat")
       .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
-    // postings LAST: its _SUCCESS marker is the whole index's
-    // completeness witness (ensure() keys reuse on it)
     val flatC = lit(cents.flatten.toArray)
     val pqFlat = lit(cb)
     c0.withColumn("cell",
@@ -485,63 +483,23 @@ object AnnIndex {
     */
   @volatile private[graft] var lastDriftDir: Option[String] = None
 
-  private val ensuredDrift = scala.collection.mutable.Map.empty[String, String]
-
   /** The drift demo's index: built with SAMPLE centroids (trainRounds =
     * 0), then the quantizer retrained in place for 2 Lloyd rounds —
     * postings keep their stale assignments, so [[driftStats]] has real
     * divergence to measure, and the oracle re-derives it entirely from
-    * the STORED centroids + postings. Once per (JVM, corpus contents).
+    * the STORED centroids + postings. Once per corpus contents; a build
+    * interrupted between the two steps is cleared and rebuilt whole, so
+    * an undrifted index is never served.
     */
   def ensureDrifted(s: SparkSession, sfDir: String): String = {
-    // completeness witness = a marker written strictly AFTER the
-    // retrain: postings/_SUCCESS alone (build()'s witness) would let
-    // a crash between build and retrain persist a permanently
-    // UNDRIFTED demo index — hash-consistent with its oracle, but
-    // measuring nothing. A missing marker rebuilds from scratch.
-    val root = ensureCopy(sfDir, "graft_ann_index_drift", ensuredDrift)(
-      r => marker(s"$r/_GRAFT_RETRAINED")) { r =>
-      graft.ops.LocalFs.deleteTree(java.nio.file.Paths.get(r))
+    val root = ContentTag.buildOnce("graft_ann_index_drift",
+      ContentTag.of(sfDir, Seq("embeddings"))) { r =>
       build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0, trainRounds = 0)
       retrainCentroids(s, r, rounds = 2)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$r/_GRAFT_RETRAINED"))
     }
     lastDriftDir = Some(root)
     root
   }
-
-  /** Content-fingerprint identity over the embeddings tree — see
-    * [[graft.ops.ContentTag]]: an in-process rewrite of the corpus mints
-    * a new tag and rebuilds instead of serving a stale index.
-    */
-  private def tagFor(dir: String): String =
-    graft.ops.ContentTag.of(dir, Seq("embeddings"))
-
-  /** Shared scaffolding for the ensure* demo-index family ([[ensure]],
-    * [[ensureDeleted]], [[ensureDrifted]], [[ensureAttrs]]): one
-    * content-tagged root per (JVM, corpus contents) under the JVM temp
-    * dir, reused across JVMs when `isComplete` sees the copy's own
-    * completeness witness on disk. Each variant supplies ONLY its
-    * subdir, witness rule, and build steps — the reuse/crash-window
-    * logic lives here once (the ensureDrifted marker lesson: a witness
-    * must be written strictly after the LAST build step, so isComplete
-    * and buildSteps are the variant's whole contract).
-    */
-  private def ensureCopy(
-      sfDir: String, subdir: String,
-      cache: scala.collection.mutable.Map[String, String])(
-      isComplete: String => Boolean)(buildSteps: String => Unit): String =
-    synchronized {
-      val tag = tagFor(sfDir)
-      cache.getOrElseUpdate(tag, {
-        val r = s"${sys.props("java.io.tmpdir")}/$subdir/$tag"
-        if (!isComplete(r)) buildSteps(r)
-        r
-      })
-    }
-
-  private def marker(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
 
   /** Most recent ensure()'d index root — the side channel the
     * dynamically-built q_ann_indexed oracle reads (Verify dumps
@@ -551,17 +509,13 @@ object AnnIndex {
     */
   @volatile private[graft] var lastEnsuredDir: Option[String] = None
 
-  private val ensured = scala.collection.mutable.Map.empty[String, String]
-
   /** Idempotently build the index for `sfDir`'s embeddings table into
-    * the JVM temp dir, once per (JVM, corpus contents) — and across
-    * JVMs via the postings `_SUCCESS` marker, so Bench's min-of-3 and
-    * later rounds reuse the stored layout exactly like BucketedTables.
-    * Returns the index root.
+    * the JVM temp dir, once per corpus contents, so Bench's min-of-3
+    * and later JVMs reuse the stored layout. Returns the index root.
     */
   def ensure(s: SparkSession, sfDir: String): String = {
-    val root = ensureCopy(sfDir, "graft_ann_index", ensured)(
-      r => marker(s"${postingsPath(r)}/_SUCCESS")) { r =>
+    val root = ContentTag.buildOnce("graft_ann_index",
+      ContentTag.of(sfDir, Seq("embeddings"))) { r =>
       build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0, trainRounds = 1)
     }
     lastEnsuredDir = Some(root)
@@ -573,26 +527,19 @@ object AnnIndex {
     */
   @volatile private[graft] var lastDeletedDir: Option[String] = None
 
-  private val ensuredDel = scala.collection.mutable.Map.empty[String, String]
-
   /** [[ensure]]'s twin for the deletion demo: its OWN index copy (the
     * shared ensure() index must stay untouched for the other probes and
-    * Bench's min-of-3), built once per (JVM, corpus contents), then
-    * every `vec_id % 41 == 0` tombstoned via [[delete]] — a pure
-    * function of the data, so the oracle re-derives the deleted set
-    * from the STORED tombstones table. Returns the index root.
+    * Bench's min-of-3), built once per corpus contents, then every
+    * `vec_id % 41 == 0` tombstoned via [[delete]] — a pure function of
+    * the data, so the oracle re-derives the deleted set from the STORED
+    * tombstones table. Returns the index root.
     */
   def ensureDeleted(s: SparkSession, sfDir: String): String = {
-    // two stepwise witnesses: a crash between build and delete re-runs
-    // only the missing step on the next call
-    val root = ensureCopy(sfDir, "graft_ann_index_del", ensuredDel)(
-      r => marker(s"${postingsPath(r)}/_SUCCESS") &&
-        marker(s"${tombstonesPath(r)}/_SUCCESS")) { r =>
-      if (!marker(s"${postingsPath(r)}/_SUCCESS"))
-        build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0, trainRounds = 1)
-      if (!marker(s"${tombstonesPath(r)}/_SUCCESS"))
-        delete(graft.Tables(s, sfDir, "embeddings")
-          .filter(col("vec_id") % 41 === 0), r)
+    val root = ContentTag.buildOnce("graft_ann_index_del",
+      ContentTag.of(sfDir, Seq("embeddings"))) { r =>
+      build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0, trainRounds = 1)
+      delete(graft.Tables(s, sfDir, "embeddings")
+        .filter(col("vec_id") % 41 === 0), r)
     }
     lastDeletedDir = Some(root)
     root
@@ -603,18 +550,16 @@ object AnnIndex {
     */
   @volatile private[graft] var lastAttrDir: Option[String] = None
 
-  private val ensuredAttr = scala.collection.mutable.Map.empty[String, String]
-
   /** [[ensure]]'s twin for the FILTERED-search demo: its own index copy
     * built with `attrCols = Seq("label")` — the embeddings table's
     * metadata column stored inline in the postings rows — once per
-    * (JVM, corpus contents). The shared ensure() index stays untouched
-    * (its postings schema is pinned by the other probes' stored-bytes
+    * corpus contents. The shared ensure() index stays untouched (its
+    * postings schema is pinned by the other probes' stored-bytes
     * oracles). Returns the index root.
     */
   def ensureAttrs(s: SparkSession, sfDir: String): String = {
-    val root = ensureCopy(sfDir, "graft_ann_index_attr", ensuredAttr)(
-      r => marker(s"${postingsPath(r)}/_SUCCESS")) { r =>
+    val root = ContentTag.buildOnce("graft_ann_index_attr",
+      ContentTag.of(sfDir, Seq("embeddings"))) { r =>
       build(graft.Tables(s, sfDir, "embeddings"), r, nlist = 0,
         trainRounds = 1, attrCols = Seq("label"))
     }

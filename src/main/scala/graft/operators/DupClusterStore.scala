@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.ops.ContentTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   * path embeds [[graft.ops.ContentTag]] of the documents table plus the
   * threshold, so a corpus rewrite or a different operating point builds
   * a new assignment table instead of silently serving stale clusters.
-  * The _SUCCESS marker gates cross-JVM reuse (Spark writes it last).
+  * Reuse across calls and JVMs follows [[graft.ops.ContentTag]]'s rule.
   *
   * The registered self-contained queries keep the full
   * pipeline-under-oracle contract; the `_stored` variants registered
@@ -40,41 +41,33 @@ object DupClusterStore {
     */
   @volatile private[graft] var lastEnsuredDir: Option[String] = None
 
-  private val ensured = scala.collection.mutable.Map.empty[String, String]
-
   /** Idempotently build the assignment table for `sfDir`'s documents at
-    * `threshold`, once per (JVM, corpus contents, threshold) — and
-    * across JVMs via the parquet `_SUCCESS` marker. Returns the root.
+    * `threshold`, once per (corpus contents, threshold). Returns the root.
     *
     * Build path is the 100 TB one: connectivity-mode edges (clone-group
     * linear) into min-label connected components — the exact
     * q_dup_clusters semantics, spec-pinned equal to it.
     */
-  def ensure(s: SparkSession, sfDir: String, threshold: Double = 0.05): String =
-    synchronized {
-      val tag = graft.ops.ContentTag.of(sfDir, Seq("documents"))
-      val key = f"${tag}_t${math.round(threshold * 1000)}%d"
-      val root = ensured.getOrElseUpdate(key, {
-        val r = s"${sys.props("java.io.tmpdir")}/graft_dup_clusters/v1_$key"
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$r/_SUCCESS"))) {
-          val edges = DedupOps.ngramJaccardConnectivityEdges(
-            Tables(s, sfDir, "documents"), "doc_id", "text", threshold)
-          GraphOps.dupClusters(edges)
-            .select(col("id").as("doc_id"), col("cluster_id"))
-            // one file: the table is |clustered docs|-sized (pairs-dense
-            // corpora stay far below the corpus row count), and single-
-            // file reads keep the DuckDB oracle glob trivial. At real
-            // 100 TB scale this coalesce(1) is the one knob to revisit —
-            // a partitioned layout bucketed by doc_id hash serves the
-            // same keyed probes.
-            .coalesce(1)
-            .write.mode("overwrite").parquet(r)
-        }
-        r
-      })
-      lastEnsuredDir = Some(root)
-      root
+  def ensure(s: SparkSession, sfDir: String, threshold: Double = 0.05): String = {
+    val root = ContentTag.buildOnce(
+      f"graft_dup_clusters/v1_t${math.round(threshold * 1000)}%d",
+      ContentTag.of(sfDir, Seq("documents"))) { r =>
+      val edges = DedupOps.ngramJaccardConnectivityEdges(
+        Tables(s, sfDir, "documents"), "doc_id", "text", threshold)
+      GraphOps.dupClusters(edges)
+        .select(col("id").as("doc_id"), col("cluster_id"))
+        // one file: the table is |clustered docs|-sized (pairs-dense
+        // corpora stay far below the corpus row count), and single-
+        // file reads keep the DuckDB oracle glob trivial. At real
+        // 100 TB scale this coalesce(1) is the one knob to revisit —
+        // a partitioned layout bucketed by doc_id hash serves the
+        // same keyed probes.
+        .coalesce(1)
+        .write.mode("overwrite").parquet(r)
     }
+    lastEnsuredDir = Some(root)
+    root
+  }
 
   /** The stored assignments as a DataFrame — the consumers' read path. */
   def assignments(s: SparkSession, sfDir: String, threshold: Double = 0.05): DataFrame =
@@ -130,8 +123,6 @@ object DupClusterStore {
 
   private val Ledger = "_GRAFT_LAST_BATCH"
   private val AppendTables = Seq("membership", "sizes", "postings")
-
-  private val ensuredInc = scala.collection.mutable.Map.empty[String, String]
 
   /** Recover BOTH swap scopes: the whole-root swap (build/retract) and
     * the assign-table swap (maintain's commit unit). Safe no-op on a
@@ -201,36 +192,18 @@ object DupClusterStore {
     * which flowed through the incremental machinery, while its DuckDB
     * oracle recomputes the FULL clustering from the raw corpus: a wrong
     * joiner resolution, edge, merge, or ledger interaction flips the
-    * driver's hash. Completeness witness is the ledger file (written
-    * only by the final maintain's swap); a stale partial root is
-    * cleared and rebuilt.
+    * driver's hash. Both steps run as one [[graft.ops.ContentTag]]
+    * build: a crash anywhere in them, including mid-swap with a stale
+    * `.staging`/`.old` pair beside the root, leaves no marker, so the
+    * next call clears the root and its siblings and builds it whole.
     */
   def ensureIncrementalDemo(s: SparkSession, sfDir: String): String =
-    synchronized {
-      val tag = graft.ops.ContentTag.of(sfDir, Seq("documents"))
-      ensuredInc.getOrElseUpdate(tag, {
-        val root =
-          s"${sys.props("java.io.tmpdir")}/graft_dup_clusters_inc/v2_$tag"
-        // Recover an interrupted swap BEFORE reading the ledger (ADVICE
-        // r19, medium): a crash in maintainIncremental's rename window
-        // leaves root renamed aside with a completed staging — reading
-        // lastBatch first would see -1, rebuild the lower half, and the
-        // inner recoverSwap would then restore the COMPLETED store's
-        // ledger, making the follow-up maintain(batchId=0) a no-op: the
-        // store would permanently hold only the lower half while its
-        // ledger reads complete.
-        recoverStore(s, root, "DupClusterStore.ensureIncrementalDemo")
-        if (lastBatch(root) < 0L) {
-          graft.ops.LocalFs.deleteTree(java.nio.file.Paths.get(root))
-          val docs = Tables(s, sfDir, "documents")
-          val maxId = docs.agg(max("doc_id")).head().getLong(0)
-          val cut = maxId / 2
-          buildIncremental(s, docs.filter(col("doc_id") <= cut), root)
-          maintainIncremental(s, docs.filter(col("doc_id") > cut), root,
-            batchId = 0L)
-        }
-        root
-      })
+    ContentTag.buildOnce("graft_dup_clusters_inc/v2",
+      ContentTag.of(sfDir, Seq("documents"))) { root =>
+      val docs = Tables(s, sfDir, "documents")
+      val cut = docs.agg(max("doc_id")).head().getLong(0) / 2
+      buildIncremental(s, docs.filter(col("doc_id") <= cut), root)
+      maintainIncremental(s, docs.filter(col("doc_id") > cut), root, batchId = 0L)
     }
 
   /** Last batch id applied to the incremental store, or -1. The ledger

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.ContentTag
 import graft.plans.SummaryRewrite
 import graft.plans.SummaryRewrite.SummarySpec
 
@@ -22,15 +23,55 @@ import graft.plans.SummaryRewrite.SummarySpec
   */
 object SummaryTables {
 
-  private def tagFor(dir: String): String =
-    graft.ops.ContentTag.of(dir, Seq("orders"))
-
   /** The exact-cents expression (this engine's decimal-exact idiom) —
     * ONE definition shared by the summary build, the registration text,
     * and the consuming queries, so the name-canonical expression match
     * can never drift from the stored partial.
     */
   val CentsExprSql = "CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)"
+
+  /** The orders rollup every fixture here stores: count, min/max price,
+    * the order-key sum and its non-null count, then `extra` partials.
+    */
+  private def rollup(orders: DataFrame, keys: Seq[String],
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    orders.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("cnt"), Seq(
+        min(col("o_totalprice")).as("min_price"),
+        max(col("o_totalprice")).as("max_price"),
+        sum(col("o_orderkey")).as("sum_okey"),
+        count(col("o_orderkey")).as("cnt_okey")) ++ extra: _*)
+
+  /** The registration literal describing a [[rollup]] stored at `path`. */
+  private def spec(path: String, keys: Seq[String], tag: String): SummarySpec =
+    SummarySpec(
+      summaryPath = path,
+      keys = keys,
+      countCol = "cnt",
+      minCols = Map("o_totalprice" -> "min_price"),
+      maxCols = Map("o_totalprice" -> "max_price"),
+      sumCols = Map("o_orderkey" -> "sum_okey"),
+      cntCols = Map("o_orderkey" -> "cnt_okey"),
+      baseTag = tag)
+
+  private val FineKeys = Seq("o_orderpriority", "o_orderstatus")
+
+  /** [[ContentTag.buildOnce]] for a registered fixture: a rebuild first
+    * drops the registrations serving from the root it clears.
+    */
+  private def buildRegistered(name: String, tag: String)(
+      build: String => Unit): String =
+    ContentTag.buildOnce(name, tag) { root =>
+      SummaryRewrite.dropUnder(root)
+      build(root)
+    }
+
+  /** Register `spec` unless an equal spec already is — fixtures re-bind
+    * on every call, and a repeat [[SummaryRewrite.register]] reads the
+    * base and summary schemas again.
+    */
+  private def bind(srcPath: String, spec: SummarySpec): Unit =
+    if (!SummaryRewrite.holds(spec)) SummaryRewrite.register(srcPath, spec)
 
   /** Idempotently build + register the orders summary for `dir`'s
     * current contents; returns the summary path. The path carries a
@@ -39,26 +80,15 @@ object SummaryTables {
     * older on-disk summary rebuilds instead of failing register()'s
     * schema validation.
     */
-  def ensure(s: SparkSession, dir: String): String = synchronized {
-    val tag = tagFor(dir)
-    val spec = fineSpec(tag) // ONE spec literal shared with deriveCoarse
-    val root = spec.summaryPath
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/_SUCCESS"))) {
-      Tables(s, dir, "orders")
-        .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("o_totalprice")).as("min_price"),
-          max(col("o_totalprice")).as("max_price"),
-          sum(col("o_orderkey")).as("sum_okey"),
-          count(col("o_orderkey")).as("cnt_okey"),
-          sum(expr(CentsExprSql)).as("sum_cents"))
+  def ensure(s: SparkSession, dir: String): String = {
+    val tag = ContentTag.of(dir, Seq("orders"))
+    val root = buildRegistered("graft_summary/v3", tag) { root =>
+      rollup(Tables(s, dir, "orders"), FineKeys, sum(expr(CentsExprSql)).as("sum_cents"))
         .coalesce(1).write.mode("overwrite").parquet(root)
       invalidateValidated(root)
     }
-    // registration is idempotent (replace) and tag-keyed with the
-    // summary itself: same call both builds and (re)binds
-    SummaryRewrite.register(s"$dir/orders.parquet", spec)
+    // tag-keyed with the summary itself: same call both builds and binds
+    bind(s"$dir/orders.parquet", fineSpec(root, tag))
     root
   }
 
@@ -70,29 +100,14 @@ object SummaryTables {
     * ALONGSIDE [[ensure]]'s (priority, status) summary — the rewrite
     * tries candidates per base table in registration order.
     */
-  def ensureCust(s: SparkSession, dir: String): String = synchronized {
-    val tag = tagFor(dir)
-    val root = s"${sys.props("java.io.tmpdir")}/graft_summary_cust/v1_$tag"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/_SUCCESS")))
-      Tables(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("o_totalprice")).as("min_price"),
-          max(col("o_totalprice")).as("max_price"),
-          sum(col("o_orderkey")).as("sum_okey"),
-          count(col("o_orderkey")).as("cnt_okey"))
+  def ensureCust(s: SparkSession, dir: String): String = {
+    val tag = ContentTag.of(dir, Seq("orders"))
+    val root = buildRegistered("graft_summary_cust/v1", tag) { root =>
+      rollup(Tables(s, dir, "orders"), Seq("o_custkey"))
         .coalesce(1).write.mode("overwrite").parquet(root)
-    invalidateValidated(root)
-    SummaryRewrite.register(s"$dir/orders.parquet", SummarySpec(
-      summaryPath = root,
-      keys = Seq("o_custkey"),
-      countCol = "cnt",
-      minCols = Map("o_totalprice" -> "min_price"),
-      maxCols = Map("o_totalprice" -> "max_price"),
-      sumCols = Map("o_orderkey" -> "sum_okey"),
-      cntCols = Map("o_orderkey" -> "cnt_okey"),
-      baseTag = tag))
+      invalidateValidated(root)
+    }
+    bind(s"$dir/orders.parquet", spec(root, Seq("o_custkey"), tag))
     root
   }
 
@@ -111,13 +126,14 @@ object SummaryTables {
     * query-time rollup rewrite already relies on, here applied at
     * BUILD time and persisted).
     */
-  def ensureCoarse(s: SparkSession, dir: String): String = synchronized {
-    ensure(s, dir) // builds + registers the finer summary
-    val tag = tagFor(dir)
-    val root = s"${sys.props("java.io.tmpdir")}/graft_summary_coarse/v1_$tag"
-    val spec = deriveCoarse(s, fineSpec(tag),
-      coarseKeys = Seq("o_orderpriority"), outPath = root)
-    SummaryRewrite.register(s"$dir/orders.parquet", spec)
+  def ensureCoarse(s: SparkSession, dir: String): String = {
+    // ensure() builds + registers the finer summary
+    val fine = fineSpec(ensure(s, dir), ContentTag.of(dir, Seq("orders")))
+    val keys = Seq("o_orderpriority")
+    val root = buildRegistered("graft_summary_coarse/v1", fine.baseTag) { root =>
+      deriveCoarse(s, fine, keys, root)
+    }
+    bind(s"$dir/orders.parquet", fine.copy(summaryPath = root, keys = keys))
     root
   }
 
@@ -125,16 +141,8 @@ object SummaryTables {
     * and the derivation input for [[ensureCoarse]]/[[deriveCoarse]]
     * callers: one definition, so build and derivation cannot drift.
     */
-  private def fineSpec(tag: String): SummarySpec = SummarySpec(
-    summaryPath = s"${sys.props("java.io.tmpdir")}/graft_summary/v3_$tag",
-    keys = Seq("o_orderpriority", "o_orderstatus"),
-    countCol = "cnt",
-    minCols = Map("o_totalprice" -> "min_price"),
-    maxCols = Map("o_totalprice" -> "max_price"),
-    sumCols = Map("o_orderkey" -> "sum_okey"),
-    cntCols = Map("o_orderkey" -> "cnt_okey"),
-    sumExprs = Map(CentsExprSql -> "sum_cents"),
-    baseTag = tag)
+  private def fineSpec(root: String, tag: String): SummarySpec =
+    spec(root, FineKeys, tag).copy(sumExprs = Map(CentsExprSql -> "sum_cents"))
 
   /** GENERIC summary-over-summary derivation — the library API behind
     * [[ensureCoarse]]: roll a finer summary's stored partials up to
@@ -148,9 +156,9 @@ object SummaryTables {
     * applied once at BUILD time and persisted. At 100 TB the whole
     * derivation ladder above the first summary reads |finer keys| rows
     * per rung; the fact corpus is scanned exactly once, at the bottom.
-    * Build is skipped when `outPath/_SUCCESS` already exists (the
-    * standard fixture reuse); the schema-validation cache for the path
-    * is invalidated on build.
+    * Every call (over)writes `outPath` and invalidates its
+    * schema-validation cache; reuse across calls is the caller's
+    * (ensureCoarse derives under [[graft.ops.ContentTag.buildOnce]]).
     */
   def deriveCoarse(
       s: SparkSession, fine: SummarySpec, coarseKeys: Seq[String],
@@ -161,20 +169,17 @@ object SummaryTables {
       s"SummaryTables.deriveCoarse($outPath): coarse keys " +
         s"${coarseKeys.mkString(", ")} must be a non-empty subset of the " +
         s"finer summary's keys ${fine.keys.mkString(", ")}")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outPath/_SUCCESS"))) {
-      val aggs: Seq[org.apache.spark.sql.Column] =
-        Seq(sum(col(fine.countCol)).as(fine.countCol)) ++
-          fine.minCols.values.map(p => min(col(p)).as(p)) ++
-          fine.maxCols.values.map(p => max(col(p)).as(p)) ++
-          (fine.sumCols.values ++ fine.cntCols.values ++
-            fine.sumExprs.values).map(p => sum(col(p)).as(p))
-      s.read.parquet(fine.summaryPath)
-        .groupBy(coarseKeys.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .coalesce(1).write.mode("overwrite").parquet(outPath)
-      invalidateValidated(outPath)
-    }
+    val aggs: Seq[org.apache.spark.sql.Column] =
+      Seq(sum(col(fine.countCol)).as(fine.countCol)) ++
+        fine.minCols.values.map(p => min(col(p)).as(p)) ++
+        fine.maxCols.values.map(p => max(col(p)).as(p)) ++
+        (fine.sumCols.values ++ fine.cntCols.values ++
+          fine.sumExprs.values).map(p => sum(col(p)).as(p))
+    s.read.parquet(fine.summaryPath)
+      .groupBy(coarseKeys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .coalesce(1).write.mode("overwrite").parquet(outPath)
+    invalidateValidated(outPath)
     fine.copy(summaryPath = outPath, keys = coarseKeys)
   }
 
@@ -186,44 +191,24 @@ object SummaryTables {
     * (SummaryRewrite.rewriteUnion) onto two keys-sized summary scans.
     * Returns (coldPath, hotPath).
     */
-  def ensureSplit(s: SparkSession, dir: String): (String, String) = synchronized {
-    val tag = tagFor(dir)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_orders_split/v1_$tag"
-    val (coldP, hotP) = (s"$base/cold.parquet", s"$base/hot.parquet")
-    val (coldS, hotS) = (s"$base/summary_cold", s"$base/summary_hot")
-    val done = java.nio.file.Paths.get(s"$base/.split_done")
-    if (!java.nio.file.Files.exists(done)) {
-      val cut = "1996-01-01"
+  def ensureSplit(s: SparkSession, dir: String): (String, String) = {
+    val tag = ContentTag.of(dir, Seq("orders"))
+    val cut = lit("1996-01-01")
+    val halves = Seq("cold" -> (col("o_orderdate") < cut),
+      "hot" -> (col("o_orderdate") >= cut))
+    val base = buildRegistered("graft_orders_split/v1", tag) { base =>
       val orders = Tables(s, dir, "orders")
-      orders.filter(col("o_orderdate") < lit(cut))
-        .write.mode("overwrite").parquet(coldP)
-      orders.filter(col("o_orderdate") >= lit(cut))
-        .write.mode("overwrite").parquet(hotP)
-      def rollup(p: String) = s.read.parquet(p)
-        .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("o_totalprice")).as("min_price"),
-          max(col("o_totalprice")).as("max_price"),
-          sum(col("o_orderkey")).as("sum_okey"),
-          count(col("o_orderkey")).as("cnt_okey"))
-      rollup(coldP).coalesce(1).write.mode("overwrite").parquet(coldS)
-      rollup(hotP).coalesce(1).write.mode("overwrite").parquet(hotS)
-      invalidateValidated(coldS)
-      invalidateValidated(hotS)
-      java.nio.file.Files.createFile(done)
+      halves.foreach { case (half, keep) =>
+        orders.filter(keep).write.mode("overwrite").parquet(s"$base/$half.parquet")
+        rollup(s.read.parquet(s"$base/$half.parquet"), FineKeys)
+          .coalesce(1).write.mode("overwrite").parquet(s"$base/summary_$half")
+        invalidateValidated(s"$base/summary_$half")
+      }
     }
-    def spec(sp: String) = SummarySpec(
-      summaryPath = sp,
-      keys = Seq("o_orderpriority", "o_orderstatus"),
-      countCol = "cnt",
-      minCols = Map("o_totalprice" -> "min_price"),
-      maxCols = Map("o_totalprice" -> "max_price"),
-      sumCols = Map("o_orderkey" -> "sum_okey"),
-      cntCols = Map("o_orderkey" -> "cnt_okey"),
-      baseTag = tag)
-    SummaryRewrite.register(coldP, spec(coldS))
-    SummaryRewrite.register(hotP, spec(hotS))
-    (coldP, hotP)
+    halves.foreach { case (half, _) =>
+      bind(s"$base/$half.parquet", spec(s"$base/summary_$half", FineKeys, tag))
+    }
+    (s"$base/cold.parquet", s"$base/hot.parquet")
   }
 
   /** The IVM-freshness fixture: a (priority, status) orders summary
@@ -237,8 +222,7 @@ object SummaryTables {
     * and once for the feed window; queries afterwards touch only the
     * keys-sized summary.
     */
-  def ensureIvm(s: SparkSession, dir: String): String = synchronized {
-    val tag = tagFor(dir)
+  def ensureIvm(s: SparkSession, dir: String): String =
     // v2: + a RETRACTION batch — batch 1 inserts the post-cut rows plus
     // synthetic below-market rows that become every touched group's
     // MINIMUM; batch 2 deletes them, exercising maintain()'s targeted
@@ -246,19 +230,10 @@ object SummaryTables {
     // repair the old minimum would stick at the synthetic price and the
     // base-table oracle would flip the hash). The final state equals
     // the full orders rollup, so q_mv_ivm's oracle is untouched.
-    val root = s"${sys.props("java.io.tmpdir")}/graft_summary_ivm/v2_$tag"
-    val done = java.nio.file.Paths.get(s"$root.ivm_done")
-    if (!java.nio.file.Files.exists(done)) {
+    ContentTag.buildOnce("graft_summary_ivm/v2", ContentTag.of(dir, Seq("orders"))) { root =>
       val cut = "1996-01-01"
       val orders = Tables(s, dir, "orders")
-      def rollup(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          min(col("o_totalprice")).as("min_price"),
-          max(col("o_totalprice")).as("max_price"),
-          sum(col("o_orderkey")).as("sum_okey"),
-          count(col("o_orderkey")).as("cnt_okey"))
-      rollup(orders.filter(col("o_orderdate") < lit(cut)))
+      rollup(orders.filter(col("o_orderdate") < lit(cut)), FineKeys)
         .coalesce(1).write.mode("overwrite").parquet(root)
       invalidateValidated(root)
       val feedCols = Seq(col("o_orderpriority"), col("o_orderstatus"),
@@ -275,7 +250,7 @@ object SummaryTables {
         .select(feedCols: _*)
         .unionByName(synth)
         .select(lit("insert").as("change_type") +: feedCols: _*)
-      maintain(root, insertFeed, Seq("o_orderpriority", "o_orderstatus"),
+      maintain(root, insertFeed, FineKeys,
         countCol = "cnt",
         sumColsBase = Map("o_orderkey" -> "sum_okey"),
         minColsBase = Map("o_totalprice" -> "min_price"),
@@ -284,7 +259,7 @@ object SummaryTables {
         batchId = Some(1L))
       val deleteFeed = synth
         .select(lit("delete").as("change_type") +: feedCols: _*)
-      maintain(root, deleteFeed, Seq("o_orderpriority", "o_orderstatus"),
+      maintain(root, deleteFeed, FineKeys,
         countCol = "cnt",
         sumColsBase = Map("o_orderkey" -> "sum_okey"),
         minColsBase = Map("o_totalprice" -> "min_price"),
@@ -294,10 +269,7 @@ object SummaryTables {
         // post-batch-2 base = the full orders table (the synthetics are
         // gone): the repair recomputes the deleted minima from it
         baseAfter = Some(orders))
-      java.nio.file.Files.createFile(done)
     }
-    root
-  }
 
   /** Name of the applied-batch ledger sidecar (see `batchId` below). */
   private[graft] val BatchLedger = "_GRAFT_LAST_BATCH"
@@ -402,7 +374,7 @@ object SummaryTables {
     // extra partial (e.g. a sum-of-expression column no feed row can
     // update) would otherwise be silently REWRITTEN WITHOUT it — the
     // loss surfacing only later as a register() schema failure on a
-    // path that skips rebuild because _SUCCESS still exists. Fail fast
+    // path that skips rebuild because its build marker exists. Fail fast
     // here instead, naming the drift. (Schema-only read — no data
     // pages; runs after recovery so the footer it reads is the
     // recovered table's. Cached per (path, maintainable set): our own
@@ -584,5 +556,8 @@ object SummaryTables {
       joined.select(cols: _*)
         .filter(col(countCol) > 0)
     }
+    // a registration of this path holds the file listing the swap just
+    // deleted: drop it, so the next ensure() binds the new files
+    SummaryRewrite.dropUnder(summaryPath)
   }
 }

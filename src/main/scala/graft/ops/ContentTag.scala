@@ -1,15 +1,31 @@
 package graft.ops
 
-/** Content-sensitive dataset identity shared by every write-once derived
-  * layout (bucketed tables, JSONL corpus, compaction demo, ANN index):
-  * md5 over the dataset dir PATH plus a (file name, size, mtime)
-  * fingerprint of the named source parquet trees. The path alone is a
-  * stale-data hazard — caches key per (JVM, dir), so an in-process
-  * rewrite of the dir would keep serving the derived copy of the OLD
-  * bytes. Folding file metadata in makes a rewrite mint a new tag, which
-  * rebuilds the derived layout; superseded copies linger in the tmpdir
-  * (bounded by the number of in-process rewrites — rare outside tests)
-  * rather than risking a wrong serve.
+/** Content-sensitive dataset identity and the one write-once derived
+  * layout built under it (MV summaries, ANN indexes, the JSONL corpus,
+  * the dup-cluster stores, the compaction copy).
+  *
+  * [[of]] is md5 over the dataset dir PATH plus a (file name, size,
+  * mtime) fingerprint of the named source parquet trees. The path alone
+  * is a stale-data hazard: an in-process rewrite of the dir would keep
+  * serving the derived copy of the OLD bytes. Folding file metadata in
+  * makes a rewrite mint a new tag, which rebuilds the derived layout;
+  * superseded copies linger in the tmpdir (bounded by the number of
+  * in-process rewrites — rare outside tests) rather than risking a
+  * wrong serve.
+  *
+  * The reuse rule, written here once — every [[buildOnce]] caller
+  * follows it and no caller has its own:
+  *  - a layout lives at `<java.io.tmpdir>/<name>/<tag>`;
+  *  - it is reused, in this JVM or a later one, only when its marker
+  *    `<root>.built` exists BESIDE the root. Nothing inside the root is a
+  *    witness: Spark's `_SUCCESS` is absent when
+  *    `mapreduce.fileoutputcommitter.marksuccessfuljobs` is off, and a
+  *    build that swaps its whole root (`DupClusterStore.swapRoot`) leaves
+  *    its own commit marker there between steps;
+  *  - otherwise the root and its `.staging`/`.old` swap siblings are
+  *    cleared, the layout is built whole, and the marker is written
+  *    last. A build interrupted at any step leaves no marker, so the
+  *    next call clears it and starts over — there is no partial resume.
   *
   * Local-FS walk matches the local[n] rig; a cluster port swaps in the
   * Hadoop FileSystem listing (same (path, size, mtime) triple). An
@@ -45,5 +61,25 @@ object ContentTag {
       } catch { case scala.util.control.NonFatal(_) => /* path-only tag */ }
     }
     md.digest.take(8).map("%02x".format(_)).mkString
+  }
+
+  /** The derived layout `<java.io.tmpdir>/<name>/<tag>` (`tag` from
+    * [[of]]), built by `build(root)` under the reuse rule above; returns
+    * the root. One lock covers the check, the clear, the build and the
+    * marker, so two in-JVM callers never build the same root at once.
+    */
+  private[graft] def buildOnce(name: String, tag: String)(
+      build: String => Unit): String = synchronized {
+    val root = s"${sys.props("java.io.tmpdir")}/$name/$tag"
+    val marker = java.nio.file.Paths.get(s"$root.built")
+    if (!java.nio.file.Files.exists(marker)) {
+      val (live, staged, old) = CoreOps.siblings(root)
+      Seq(live, staged, old).foreach(p =>
+        LocalFs.deleteTree(java.nio.file.Paths.get(p.toString)))
+      build(root)
+      java.nio.file.Files.createDirectories(marker.getParent)
+      java.nio.file.Files.createFile(marker)
+    }
+    root
   }
 }

@@ -19,8 +19,7 @@ import org.apache.spark.sql.types._
   * split is a plain filter on the corrupt column.
   *
   * The demo corpus is DERIVED from `documents.parquet` (write-once per
-  * (JVM, dir contents), same identity discipline as
-  * [[graft.operators.BucketedTables]]): every `doc_id % 37 == 0` line is
+  * dir contents, a [[ContentTag]] layout): every `doc_id % 37 == 0` line is
   * truncated to its first 10 bytes (never valid JSON — the prefix is
   * always an unclosed `{"doc_id":`), and every surviving
   * `doc_id % 11 == 0` line gains an unknown `"_extra"` object (the
@@ -58,10 +57,8 @@ object IngestOps {
     * the clean `to_json` of the four fields. `to_json` escapes embedded
     * newlines, so every document is exactly one line.
     */
-  def ensureJsonl(s: SparkSession, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_jsonl/" +
-      ContentTag.of(dir, Seq("documents"))
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
+  def ensureJsonl(s: SparkSession, dir: String): String =
+    ContentTag.buildOnce("graft_jsonl", ContentTag.of(dir, Seq("documents"))) { path =>
       val j = to_json(struct(col("doc_id"), col("lang"), col("source"), col("text")))
       val line = when(col("doc_id") % CorruptEvery === 0, j.substr(lit(1), lit(10)))
         .when(col("doc_id") % DriftEvery === 0,
@@ -70,8 +67,6 @@ object IngestOps {
       Tables(s, dir, "documents").select(line.as("value"))
         .write.mode("overwrite").text(path)
     }
-    path
-  }
 
   /** Permissive JSONL read with quarantine capture: clean lines parse
     * into the typed columns, malformed lines surface as all-null typed

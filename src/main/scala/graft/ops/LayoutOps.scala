@@ -120,6 +120,22 @@ object LayoutOps {
     CompactStats(in.length, bytesIn, out.length, out.map(_._2).sum)
   }
 
+  /** q_compact_scan's fixture: a deliberately fragmented copy of `dir`'s
+    * orders (64 files) compacted to ~128 MB-target files, written once
+    * per dir contents as a [[ContentTag]] layout. Returns the compacted
+    * copy's path.
+    */
+  private[graft] def ensureCompacted(
+      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val root = ContentTag.buildOnce("graft_compact",
+      ContentTag.of(dir, Seq("orders"))) { root =>
+      graft.Tables(spark, dir, "orders").repartition(64)
+        .write.mode("overwrite").parquet(s"$root/frag")
+      compactFiles(spark, s"$root/frag", s"$root/compacted", 128L << 20)
+    }
+    s"$root/compacted"
+  }
+
   /** (path, size) of every parquet data file under `path` (recursive —
     * partitioned layouts included). Local-FS listing matches the
     * local[n] rig; a cluster port swaps in the Hadoop FileSystem walk.

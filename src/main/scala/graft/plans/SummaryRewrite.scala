@@ -300,6 +300,22 @@ object SummaryRewrite extends Rule[LogicalPlan] with PredicateHelper {
   /** Drop every registration (test isolation). */
   def clear(): Unit = specs.clear()
 
+  /** Whether a spec equal to `spec` is registered — a content-tagged
+    * fixture then skips [[register]], whose base and summary reads cost
+    * a Spark job each.
+    */
+  private[graft] def holds(spec: SummarySpec): Boolean =
+    specs.values.stream.anyMatch(_.exists(_.spec == spec))
+
+  /** Drop the registrations whose summary lives at or under `root`: a
+    * rebuild clears those bytes, and a registration left in place would
+    * answer the rebuild's own aggregate from them.
+    */
+  private[graft] def dropUnder(root: String): Unit =
+    specs.replaceAll((_, regs) => regs.filterNot { r =>
+      r.spec.summaryPath == root || r.spec.summaryPath.startsWith(s"$root/")
+    })
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (specs.isEmpty) return plan
     plan.transform {

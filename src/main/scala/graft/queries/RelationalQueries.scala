@@ -2375,21 +2375,12 @@ object RelationalQueries {
     // as a first-class op: a deliberately fragmented copy of orders (64
     // KB-scale files, the streaming-sink failure mode) is compacted to
     // ~128 MB-target files via the zero-shuffle coalesce path, write-once
-    // per (JVM, dir contents). The query then aggregates the COMPACTED
+    // per dir contents. The query then aggregates the COMPACTED
     // copy; the oracle aggregates the original table — hash equality IS
     // the compaction correctness claim (content identical, only layout
     // changed). File-count/bytes mechanics are pinned in LayoutOpsSpec.
     "q_compact_scan" -> { (s, dir) =>
-      val root = s"${sys.props("java.io.tmpdir")}/graft_compact/" +
-        graft.ops.ContentTag.of(dir, Seq("orders"))
-      val out = s"$root/compacted"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/_SUCCESS"))) {
-        val frag = s"$root/frag"
-        Tables(s, dir, "orders").repartition(64)
-          .write.mode("overwrite").parquet(frag)
-        graft.ops.LayoutOps.compactFiles(s, frag, out, 128L << 20)
-      }
-      s.read.parquet(out)
+      s.read.parquet(graft.ops.LayoutOps.ensureCompacted(s, dir))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_orderkey")).as("sum_keys"),

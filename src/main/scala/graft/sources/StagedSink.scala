@@ -288,11 +288,11 @@ private[sources] class StagedBatchWrite(path: String, writeId: String,
     val live = (keep ++ retained).toSet
     retiring.filterNot(live.contains).foreach(f =>
       Files.deleteIfExists(dir.resolve(f)))
-    StagedSink.deleteRecursively(staging)
+    graft.ops.LocalFs.deleteTree(staging)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    StagedSink.deleteRecursively(staging)
+    graft.ops.LocalFs.deleteTree(staging)
 
   private def ujsonStr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -475,10 +475,4 @@ object StagedSink {
     parts(1).split("\",\"schema\"", 2)(0)
       .replace("\\\"", "\"").replace("\\\\", "\\")
   }
-
-  private[sources] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-    }
 }
