@@ -159,9 +159,9 @@ object Bench {
     // seconds are recorded in the artifact either way.
     val quietWaitBudget = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_QUIET_WAIT_SEC", "300").toInt
-    val preGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
+    val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
     var quietWaited = 0
-    while (quietWaited < quietWaitBudget && load1() > preGate) {
+    while (quietWaited < quietWaitBudget && load1() > loadGate) {
       Thread.sleep(10000)
       quietWaited += 10
     }
@@ -189,7 +189,6 @@ object Bench {
         if (benchAll) catalog.keys.toSeq.sorted else SparkEntry.benchHeadline)
     val (known, unknown) = selected.partition(catalog.contains)
     unknown.foreach(n => System.err.println(s"[bench] unknown query '$n' skipped"))
-    val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.0").toDouble
     // per-sweep budget for the r20 sleep-before-requeue (seconds)
     var gateSleepBudget = sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_GATE_SLEEP_SEC", "180").toInt

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.CoreOps
-import java.lang.management.ManagementFactory
 import java.util.concurrent.{Callable, CancellationException, ExecutionException, ExecutorService, Executors, Future}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
@@ -16,9 +15,10 @@ import org.apache.spark.sql.types._
   *     its pages in order)
   *     → distinct ids (matches.py:46-48 — *intended* semantics; the
   *       reference computes the set then returns the pre-dedup list)
-  *     → throttled per-partition detail fetch with bounded retry and
-  *       TYPED error rows (pipeline.py:49-80; the reference's non-429
-  *       error path yields None rows that would crash its own filter)
+  *     → detail fetch on one per-JVM pool, at most 20 calls in flight,
+  *       with bounded retry and TYPED error rows (pipeline.py:49-80;
+  *       the reference's non-429 error path yields None rows that would
+  *       crash its own filter)
   *     → status == 200 filter with observed reject count (pipeline.py:45-46)
   *     → nested-document transform (utils/utils.py:78-153): projection,
   *       conditional units fallback, participant array lookup, flatten
@@ -34,9 +34,9 @@ import org.apache.spark.sql.types._
   * The detail "fetch" is a pluggable function; the default fabricates a
   * deterministic match document per ID (zero-egress container). An HTTP
   * client slots in without touching plan shape: the fetch runs inside
-  * `mapPartitions`, and a fetcher that blocks is overlapped on a per-JVM
-  * pool of [[MatchPipeline.MaxInFlight]] threads (the asyncio-semaphore
-  * analog, pipeline.py:50); retry stays executor-side.
+  * `mapPartitions`, and every call runs on one per-JVM pool of
+  * [[MatchPipeline.MaxInFlight]] threads (the asyncio-semaphore analog,
+  * pipeline.py:50); retry stays executor-side.
   */
 object MatchPipeline {
 
@@ -102,19 +102,14 @@ object MatchPipeline {
     (200, doc)
   }
 
-  /** Most detail calls the fetch pool has in flight per JVM: the
-    * reference's default `rate_limit`, the size of its `asyncio.Semaphore`
-    * (pipeline.py:50,126), so one process never holds more requests open
-    * against the API than the reference does. It is per JVM, not per
-    * partition, so more partitions do not raise it. The pool size is the
-    * bound; no semaphore is needed.
+  /** Most detail calls in flight per JVM: the reference's default
+    * `rate_limit`, the size of its `asyncio.Semaphore` (pipeline.py:50,126),
+    * so one process never holds more requests open against the API than
+    * the reference does. Only the fetch pool's threads call the fetcher,
+    * so the pool size is the bound: it is per JVM, not per partition, and
+    * neither more partitions nor more task slots raise it.
     */
   val MaxInFlight = 20
-
-  /** Calls each partition makes on its task thread, timed, before it
-    * decides whether its fetcher blocks.
-    */
-  private[graft] val ProbeCalls = 3
 
   /** Partitions [[run]] spreads the deduped ids over for the fetch. */
   private val FetchPartitions = 8
@@ -131,20 +126,12 @@ object MatchPipeline {
     * (pipeline.py:49-80, matches.py:38-40, both retry paths buggy there;
     * here: bounded attempts, typed failure rows, no recursion).
     *
-    * Each partition fetches its first `ProbeCalls` ids inline on the task
-    * thread, timing each call by wall clock and thread CPU. If every one
-    * of those calls spent over three quarters of its time off the CPU
-    * (the fetcher waits on a socket or a sleep), the rest of the partition
-    * goes through a sliding window of at most [[MaxInFlight]] futures on
-    * the shared per-JVM pool and comes back in input order. A CPU-bound
-    * fetcher stays inline, where the pool would only add hand-offs: it
-    * looks that idle only on a CPU oversubscribed four times over, or on
-    * a single call stalled by a GC pause or a class-init lock, so the
-    * rule asks for every probe call and for the three quarters. At
-    * most `MaxInFlight` + (running tasks) calls are in flight per JVM:
-    * the pool's threads plus task threads still probing or inline.
-    * The retry loop runs per id either way, so attempt counts do not
-    * depend on the arm. When the task ends, for any reason, the
+    * Every id of a partition goes through a sliding window of at most
+    * [[MaxInFlight]] futures on the shared per-JVM fetch pool, and the
+    * responses come back in input order. The task thread never calls the
+    * fetcher, so at most `MaxInFlight` calls are in flight per JVM however
+    * many tasks run: the reference's one semaphore. Each future runs the
+    * whole retry loop for its id. When the task ends, for any reason, the
     * partition's outstanding calls are cancelled and start no retry.
     */
   def fetchDetails(
@@ -169,16 +156,17 @@ object MatchPipeline {
     result
   }
 
-  /** One partition's responses, in input order: probed inline, then
-    * inline or windowed on the fetch pool (see [[fetchDetails]]).
+  /** One partition's responses, in input order, windowed on the fetch
+    * pool (see [[fetchDetails]]).
     */
   private final class Fetching(ids: Iterator[String], fetch: Fetcher, maxRetries: Int)
       extends Iterator[Response] {
-    private val clock = ManagementFactory.getThreadMXBean
-    private var probed = 0
-    private var blocked = 0
-    private var window: java.util.ArrayDeque[Future[Response]] = null // null: inline
+    private val window = new java.util.ArrayDeque[Future[Response]](MaxInFlight)
     @volatile private var closed = false
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+      closed = true
+      window.forEach(_.cancel(true))
+    })
 
     /** Pooled calls check this before each attempt, so a cancelled id
       * makes no further request.
@@ -188,33 +176,16 @@ object MatchPipeline {
       fetch(id)
     }
 
-    def hasNext: Boolean = ids.hasNext || (window != null && !window.isEmpty)
+    def hasNext: Boolean = ids.hasNext || !window.isEmpty
 
-    def next(): Response =
-      if (window != null) {
-        while (window.size < MaxInFlight && ids.hasNext) {
-          val id = ids.next()
-          val call: Callable[Response] = () => fetchWithRetry(id, guarded, maxRetries)
-          window.add(fetchPool.submit(call))
-        }
-        try window.poll().get()
-        catch { case e: ExecutionException => throw e.getCause }
-      } else if (probed < ProbeCalls && clock.isCurrentThreadCpuTimeSupported) {
-        val (wall0, cpu0) = (System.nanoTime(), clock.getCurrentThreadCpuTime)
-        val r = fetchWithRetry(ids.next(), fetch, maxRetries)
-        val cpu = clock.getCurrentThreadCpuTime - cpu0
-        if (System.nanoTime() - wall0 > 4 * cpu) blocked += 1
-        probed += 1
-        if (blocked == ProbeCalls) openWindow()
-        r
-      } else fetchWithRetry(ids.next(), fetch, maxRetries)
-
-    private def openWindow(): Unit = {
-      window = new java.util.ArrayDeque[Future[Response]](MaxInFlight)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-        closed = true
-        window.forEach(_.cancel(true))
-      })
+    def next(): Response = {
+      while (window.size < MaxInFlight && ids.hasNext) {
+        val id = ids.next()
+        val call: Callable[Response] = () => fetchWithRetry(id, guarded, maxRetries)
+        window.add(fetchPool.submit(call))
+      }
+      try window.poll().get()
+      catch { case e: ExecutionException => throw e.getCause }
     }
   }
 
@@ -263,7 +234,7 @@ object MatchPipeline {
       .filter(col("queue").isin(queues.map(Integer.valueOf): _*)) // pushed
       .select("match_id").as[String]
       .distinct() // intended A1 semantics
-      .repartition(FetchPartitions) // fetch tasks; a blocking fetcher overlaps more on the fetch pool
+      .repartition(FetchPartitions) // fetch tasks; their calls share the fetch pool
 
     val obs = new Observation("fetch_stats")
     val responses = fetchDetails(ids, f).toDF()

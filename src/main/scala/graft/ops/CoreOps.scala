@@ -150,8 +150,11 @@ object CoreOps {
     else df.dropDuplicates(cols)
 
   /** Truncate-and-reload sink (reference `db.py:23-38`: `delete_many({})`
-    * then `insert_many`). `SaveMode.Overwrite` on a path/table has the
-    * identical observable semantics, atomically per partition.
+    * then `insert_many`). `SaveMode.Overwrite` on a path deletes the old
+    * files first and then writes the new ones (Spark's
+    * `InsertIntoHadoopFsRelationCommand` runs `deleteMatchingPartitions`
+    * before `FileFormatWriter.write`), so, as with the reference, a load
+    * that fails part-way leaves the path empty or partial, not the old data.
     */
   def truncateLoad(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)

@@ -44,8 +44,11 @@ class HttpMatchIdClient(val queues: Seq[Int], baseUrl: String) extends MatchIdCl
 }
 
 object HttpFetchers {
+  /** Longest `Retry-After` pause a match-detail fetch honors. */
+  private val MaxRetryAfterMs = 5000L
+
   /** Match-detail fetcher over HTTP: GET `baseUrl/match/{id}`. On a 429
-    * the server's `Retry-After` (seconds, capped by `maxRetryAfterMs`)
+    * the server's `Retry-After` (seconds, capped at `MaxRetryAfterMs`)
     * is honored BEFORE the status is returned, so the bounded retry in
     * `MatchPipeline.fetchDetails` re-attempts after the server-requested
     * pause — the reference's rate-limit sleep (`pipeline.py:75-80`)
@@ -53,13 +56,13 @@ object HttpFetchers {
     * Transport errors surface as thrown exceptions, which fetchDetails
     * already converts to typed 599 rows.
     */
-  def matchFetcher(baseUrl: String, maxRetryAfterMs: Long = 5000L): graft.MatchPipeline.Fetcher = { id =>
+  def matchFetcher(baseUrl: String): graft.MatchPipeline.Fetcher = { id =>
     val (status, body, headers) = HttpClients.get(s"$baseUrl/match/$id")
     if (status == 429) {
       val ra = headers.firstValue("Retry-After")
       val waitMs =
         if (ra.isPresent) scala.util.Try(ra.get.trim.toLong).getOrElse(0L) * 1000L else 0L
-      if (waitMs > 0) Thread.sleep(math.min(waitMs, maxRetryAfterMs))
+      if (waitMs > 0) Thread.sleep(math.min(waitMs, MaxRetryAfterMs))
     }
     (status, body)
   }

@@ -31,8 +31,8 @@ class HttpPipelineSpec extends SparkSpec {
     val puuid = "PUUID_under_test"
     val idsRequests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val matchHits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    // planted again at positions 7 and 8 of the page 10..19, past the
-    // probe calls, so those faults are fetched on the pooled window
+    // planted again at positions 7 and 8 of the page 10..19, so the same
+    // faults are also met while other calls of the window are in flight
     val rateLimited = Set("NA1_430_0", "NA1_430_17")
     val broken = Set("NA1_430_1", "NA1_430_18")
     val inflight = new java.util.concurrent.atomic.AtomicInteger
@@ -53,7 +53,7 @@ class HttpPipelineSpec extends SparkSpec {
       val id = x.getRequestURI.getPath.stripPrefix("/match/")
       val hit = matchHits.merge(id, 1, (a, b) => Integer.valueOf(a + b)).intValue
       maxInflight.accumulateAndGet(inflight.incrementAndGet(), math.max)
-      Thread.sleep(20) // service latency: the fetcher blocks, so the fetch window opens
+      Thread.sleep(20) // service latency: the fetcher blocks, so the window's calls overlap
       inflight.decrementAndGet()
       if (rateLimited(id)) {
         // planted rate limit: first attempt 429 + Retry-After, then 200
@@ -97,12 +97,12 @@ class HttpPipelineSpec extends SparkSpec {
       assert(by("NA1_430_1").status == 500 && by("NA1_430_1").error)
       assert(by("NA1_430_1").payload == "permanent server error")
       assert(matchHits.get("NA1_430_1").intValue == 3) // 1 + maxRetries, bounded
-      // the same faults on the pooled window
+      // the same faults mid-page
       assert(by("NA1_430_17").status == 200 && !by("NA1_430_17").error)
       assert(matchHits.get("NA1_430_17").intValue == 2)
       assert(by("NA1_430_18").status == 500 && by("NA1_430_18").error)
       assert(matchHits.get("NA1_430_18").intValue == 3)
-      assert(maxInflight.get > spark.sparkContext.defaultParallelism) // the window opened
+      assert(maxInflight.get > spark.sparkContext.defaultParallelism) // calls overlapped on the pool
       assert(resp.count(_.status == 200) == idsPerQueue - broken.size)
 
       // the wire documents flow through the standard transform untouched

@@ -38,13 +38,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("transient failures are retried; permanent failures become typed error rows") {
-    // The same fetcher on both arms: as is (CPU-bound, inline) and behind
-    // a 20 ms sleep, which opens the fetch window; the flaky and 404 ids
-    // come after the probe calls, so on the second arm they are pooled.
-    val probe = Seq("NA1_400_0000010", "NA1_400_0000020", "NA1_400_0000030")
-    assert(probe.size == MatchPipeline.ProbeCalls)
-    val ids = probe ++ Seq("NA1_400_0000001", "NA1_400_0000002", "NA1_400_0000003",
-      "NA1_400_0000040")
+    // The same fetcher twice: as is (CPU-bound) and behind a 20 ms sleep,
+    // so the second time the window's calls overlap.
+    val ids = Seq("NA1_400_0000010", "NA1_400_0000020", "NA1_400_0000030",
+      "NA1_400_0000001", "NA1_400_0000002", "NA1_400_0000003", "NA1_400_0000040")
     def arm(sleepMs: Long): (Map[String, MatchPipeline.Response], Map[String, Int], Int) = {
       val flaky = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
       val base = MatchPipeline.fakeFetcher(puuid)
@@ -70,7 +67,7 @@ class PipelineSpec extends SparkSpec {
     assert(attempts == ids.map(_ -> 1).toMap ++ Map("NA1_400_0000001" -> 3, "NA1_400_0000002" -> 4))
 
     val (pooledRs, pooledAttempts, pooledInflight) = arm(20L)
-    assert(pooledInflight > 1) // the window opened: one partition, several calls at once
+    assert(pooledInflight > 1) // one partition, several calls at once
     assert(pooledRs == rs)
     assert(pooledAttempts == attempts)
   }
@@ -90,7 +87,7 @@ class PipelineSpec extends SparkSpec {
     val (order, inflight) = run(FetchLog.logged(base, sleepMs = 30L))
     assert(order == ids) // input order within and across the 4 partitions
     assert(inflight > slots)
-    assert(inflight <= MatchPipeline.MaxInFlight + slots)
+    assert(inflight <= MatchPipeline.MaxInFlight)
 
     // CPU-only: each call burns 1 ms of thread CPU and never waits
     val spin: MatchPipeline.Fetcher = { id =>
@@ -101,14 +98,13 @@ class PipelineSpec extends SparkSpec {
     }
     val (cpuOrder, cpuInflight) = run(FetchLog.logged(spin, sleepMs = 0L))
     assert(cpuOrder == ids)
-    assert(cpuInflight <= slots) // stayed inline on the task threads
+    assert(cpuInflight <= MatchPipeline.MaxInFlight) // the pool bounds every fetcher
   }
 
   test("early stop cancels the fetch window: no call starts after the job returns") {
     val ids = (0 until 100).map(i => f"NA1_400_$i%07d")
     val fetch = FetchLog.logged(MatchPipeline.fakeFetcher(puuid), sleepMs = 30L)
-    // 1 row: stops during the probe; ProbeCalls + 1 rows: stops with the window open
-    Seq(1, MatchPipeline.ProbeCalls + 1).foreach { n =>
+    Seq(1, 4).foreach { n =>
       FetchLog.reset()
       val rs = MatchPipeline.fetchDetails(spark.sparkContext.parallelize(ids, 1).toDS(), fetch)
         .limit(n).collect()
@@ -116,9 +112,20 @@ class PipelineSpec extends SparkSpec {
       assert(rs.map(_.match_id).toSeq == ids.take(n))
       Thread.sleep(300)
       val started = FetchLog.startedNs.asScala.toSeq
-      assert(started.size <= MatchPipeline.ProbeCalls + MatchPipeline.MaxInFlight)
+      // the first row fills the window; each later one tops it up by one id
+      assert(started.size <= MatchPipeline.MaxInFlight + n - 1)
+      assert(FetchLog.maxInflight.get <= MatchPipeline.MaxInFlight)
       assert(started.forall(_ <= returned), s"${started.count(_ > returned)} calls after return")
     }
+  }
+
+  test("a partition's first calls already overlap: 3 blocking ids are 3 calls in flight") {
+    val ids = Seq("NA1_400_0000001", "NA1_400_0000002", "NA1_400_0000003")
+    FetchLog.reset()
+    val rs = MatchPipeline.fetchDetails(spark.sparkContext.parallelize(ids, 1).toDS(),
+      FetchLog.logged(MatchPipeline.fakeFetcher(puuid), sleepMs = 30L)).collect()
+    assert(rs.map(_.match_id).toSeq == ids)
+    assert(FetchLog.maxInflight.get == 3)
   }
 
   test("documents not containing the player are skipped (reference logs+skips)") {
@@ -173,8 +180,7 @@ class PipelineSpec extends SparkSpec {
 }
 
 /** Every call the logged fetchers of these specs make. Tasks and the fetch
-  * pool run in this JVM (local master), so statics see each call, pooled
-  * or inline.
+  * pool run in this JVM (local master), so statics see each call.
   */
 object FetchLog {
   private val attempts = new ConcurrentHashMap[String, AtomicInteger]()
