@@ -5,7 +5,6 @@ import java.util.concurrent.{Callable, CancellationException, ExecutionException
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** The reference application, end-to-end, as one declarative Spark job
   * (zwilson999/lol_data_pipeline `pipeline.py` `main()`, SURVEY.md §3.1):
@@ -14,14 +13,19 @@ import org.apache.spark.sql.types._
   *     are packed into at most leaf-node-parallelism tasks, each reading
   *     its pages in order)
   *     → distinct ids (matches.py:46-48 — *intended* semantics; the
-  *       reference computes the set then returns the pre-dedup list)
+  *       reference computes the set then returns the pre-dedup list),
+  *       hashed into the fetch partitions by the same exchange
   *     → detail fetch on one per-JVM pool, at most 20 calls in flight,
   *       with bounded retry and TYPED error rows (pipeline.py:49-80;
   *       the reference's non-429 error path yields None rows that would
   *       crash its own filter)
   *     → status == 200 filter with observed reject count (pipeline.py:45-46)
-  *     → nested-document transform (utils/utils.py:78-153): projection,
-  *       conditional units fallback, participant array lookup, flatten
+  *     → nested-document transform (utils/utils.py:78-153): one streaming
+  *       pass over each document reads only the leaves the row
+  *       needs and builds only the player's participant; projection, units
+  *       fallback, participant lookup and flatten fused; a document
+  *       without the player, or whose player is past the end of
+  *       `info.participants`, is skipped, never thrown
   *     → truncate-and-load sink (db.py:23-38) with observed row counts.
   *
   * Metrics that the reference printed as log lines are Spark
@@ -43,32 +47,26 @@ object MatchPipeline {
   /** Typed fetch result (reference Response record, utils/utils.py:15-23). */
   case class Response(match_id: String, status: Int, error: Boolean, payload: String)
 
-  /** Riot match document schema — FIXTURES.md §2, reconstructed from the
-    * reference's field accesses. gameEndTimestamp nullable: its absence
-    * drives the units fallback (utils/utils.py:130-147).
+  /** One loaded row before its two derived columns (`game_date`,
+    * `game_duration_units`): the document's match id and `info` scalars and
+    * the player's participant struct, flattened. Every field is nullable.
     */
-  val matchSchema: StructType = StructType(Seq(
-    StructField("metadata", StructType(Seq(
-      StructField("matchId", StringType),
-      StructField("participants", ArrayType(StringType))))),
-    StructField("info", StructType(Seq(
-      StructField("gameCreation", LongType),
-      StructField("gameDuration", LongType),
-      StructField("gameStartTimestamp", LongType),
-      StructField("gameEndTimestamp", LongType),
-      StructField("gameId", LongType),
-      StructField("gameMode", StringType),
-      StructField("gameVersion", StringType),
-      StructField("mapId", IntegerType),
-      StructField("participants", ArrayType(StructType(Seq(
-        StructField("puuid", StringType),
-        StructField("win", BooleanType),
-        StructField("kills", IntegerType),
-        StructField("deaths", IntegerType),
-        StructField("assists", IntegerType),
-        StructField("champion", StructType(Seq(
-          StructField("name", StringType),
-          StructField("level", IntegerType)))))))))))))
+  case class MatchRow(
+      match_id: String,
+      game_creation: java.lang.Long,
+      game_duration: java.lang.Long,
+      game_end: java.lang.Long,
+      game_id: java.lang.Long,
+      game_mode: String,
+      game_version: String,
+      map_id: Integer,
+      player_puuid: String,
+      player_win: java.lang.Boolean,
+      player_kills: Integer,
+      player_deaths: Integer,
+      player_assists: Integer,
+      player_champion_name: String,
+      player_champion_level: Integer)
 
   /** One fetch attempt: deterministic fake document, or a transient/
     * permanent failure for planted IDs (tests). Replace with HTTP.
@@ -189,31 +187,46 @@ object MatchPipeline {
     }
   }
 
-  /** The per-document transform (utils/utils.py:78-153), declaratively:
-    * nested projection + ms→date (F1) + units fallback (P5) + participant
-    * array lookup (J1) + struct flatten (F2, intended semantics).
+  /** The per-document transform (utils/utils.py:78-153): nested
+    * projection, ms→date (F1), units fallback (P5), participant array
+    * lookup (J1) and struct flatten (F2, intended semantics), fused into one
+    * typed pass per document. [[MatchDocReader]] walks each payload once
+    * with Spark's bundled Jackson (one factory per partition), touches only
+    * the leaves the row needs and builds only the player's participant
+    * struct. A document without the player yields no row
+    * (the reference logs and skips it, utils/utils.py:100-102), and so does
+    * one whose player position is past the end of `info.participants`, so
+    * a single malformed document never fails the load. Every other value
+    * is what Spark's JSON parsing with the document schema (FIXTURES.md §2)
+    * gives, malformed input included; `MatchTransformSpec` holds the two
+    * equal. The output is 17 columns, all nullable but
+    * `game_duration_units`.
     */
   def transform(responses: DataFrame, puuid: String): DataFrame = {
-    val parsed = responses
-      .withColumn("doc", from_json(col("payload"), matchSchema))
-    val pos = array_position(col("doc.metadata.participants"), puuid)
-    val me = element_at(col("doc.info.participants"), pos.cast(IntegerType))
-    val projected = parsed
-      .filter(pos > 0) // reference logs+skips when player absent (utils/utils.py:100-102)
-      .select(
-        col("doc.metadata.matchId").as("match_id"),
-        CoreOps.msToDate(col("doc.info.gameCreation")).as("game_date"),
-        col("doc.info.gameCreation").as("game_creation"),
-        col("doc.info.gameDuration").as("game_duration"),
-        when(col("doc.info.gameEndTimestamp").isNotNull, lit("s"))
-          .otherwise(lit("ms")).as("game_duration_units"),
-        col("doc.info.gameEndTimestamp").as("game_end"),
-        col("doc.info.gameId").as("game_id"),
-        col("doc.info.gameMode").as("game_mode"),
-        col("doc.info.gameVersion").as("game_version"),
-        col("doc.info.mapId").as("map_id"),
-        me.as("player"))
-    CoreOps.flattenStruct(projected)
+    import responses.sparkSession.implicits._
+    val rows = responses.select(col("payload")).as[String]
+      .mapPartitions { docs =>
+        val reader = new MatchDocReader(puuid)
+        docs.flatMap(doc => Option(reader.read(doc)))
+      }
+    rows.select(
+      col("match_id"),
+      CoreOps.msToDate(col("game_creation")).as("game_date"),
+      col("game_creation"),
+      col("game_duration"),
+      when(col("game_end").isNotNull, lit("s")).otherwise(lit("ms")).as("game_duration_units"),
+      col("game_end"),
+      col("game_id"),
+      col("game_mode"),
+      col("game_version"),
+      col("map_id"),
+      col("player_puuid"),
+      col("player_win"),
+      col("player_kills"),
+      col("player_deaths"),
+      col("player_assists"),
+      col("player_champion_name"),
+      col("player_champion_level"))
   }
 
   case class Metrics(fetched: Long, ok: Long, rejected: Long, loaded: Long)
@@ -233,8 +246,10 @@ object MatchPipeline {
       .load()
       .filter(col("queue").isin(queues.map(Integer.valueOf): _*)) // pushed
       .select("match_id").as[String]
-      .distinct() // intended A1 semantics
-      .repartition(FetchPartitions) // fetch tasks; their calls share the fetch pool
+      // fetch tasks, hashed by id; their calls share the fetch pool. The
+      // distinct (intended A1 semantics) reuses this partitioning: one exchange.
+      .repartition(FetchPartitions, col("match_id"))
+      .distinct()
 
     val obs = new Observation("fetch_stats")
     val responses = fetchDetails(ids, f).toDF()

@@ -154,6 +154,27 @@ class PipelineSpec extends SparkSpec {
     assert(m.loaded == 35) // 39 ok minus the 4 documents without the player
   }
 
+  test("a document whose player is past the end of info.participants is skipped, not thrown") {
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe4").toString + "/m"
+    val mine = MatchPipeline.fakeFetcher(puuid)
+    val short = "NA1_400_0000013"
+    val player = puuid
+    val fetch: MatchPipeline.Fetcher = { id =>
+      if (id == short) {
+        val players = (0 until 10).map(i => if (i == 9) s""""$player"""" else s""""P$i"""")
+        (200, s"""{"metadata": {"matchId": "$id", "participants": [${players.mkString(",")}]},
+                 |"info": {"gameCreation": 1600000000000, "participants": [{"puuid": "P0"}]}}""".stripMargin)
+      } else mine(id)
+    }
+    val m = MatchPipeline.run(spark, puuid, Seq(400), idsPerQueue = 40, outPath = out,
+      fetch = fetch)
+    assert(m.fetched == 40 && m.ok == 40)
+    assert(m.loaded == 39)
+    val df = spark.read.parquet(out)
+    assert(df.count() == m.loaded)
+    assert(df.filter(col("match_id") === short).count() == 0)
+  }
+
   test("truncate-reload: a second run fully replaces the first") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe2").toString + "/m"
     MatchPipeline.run(spark, puuid, Seq(400), idsPerQueue = 50, outPath = out)

@@ -13,7 +13,9 @@ BENCHMARK.json declares, one line gives both medians, the parent's
 interquartile range, how many pairs the change won (strictly better in
 the metric's `better` direction) and tied, and whether the change's
 median is inside the metric's regression bound (worse than the parent's
-median by no more than `bound`, a fraction of it).
+median by no more than `bound`, a fraction of it). With `--trace 1` the
+runs report the `per_layer` metrics instead, and those lines carry no
+bound.
 
 Both checkouts should be plain copies of the committed files (`git
 archive`), each with its own `perfbench/target`: the first run in each
@@ -53,7 +55,8 @@ def main():
     lo, _, hi = a.seeds.partition("-")
     seeds = range(int(lo), int(hi or lo) + 1)
     with open(os.path.join(a.parent, "BENCHMARK.json")) as f:
-        declared = json.load(f)["end_to_end"]
+        # traced runs report the per-layer metrics, which carry no bound
+        declared = json.load(f)["per_layer" if a.trace else "end_to_end"]
 
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
@@ -90,12 +93,13 @@ def main():
         tied = sum(c == p for p, c in zip(par, chg))
         worse = (cm - pm) if lower else (pm - cm)
         rel = worse / pm if pm else (0.0 if worse <= 0 else float("inf"))
-        inside = rel <= m["bound"]
+        inside = rel <= m.get("bound", float("inf"))
         out |= not inside
         move = (cm - pm) / pm * 100 if pm else 0.0
+        bound = (f"{'inside' if inside else 'OUTSIDE'} bound {m['bound']:.0%}"
+                 if "bound" in m else "no bound")
         print(f"  {name} ({m['unit']}): parent {pm:.4g} -> change {cm:.4g} ({move:+.1f}%), "
-              f"parent IQR {q3 - q1:.4g}, change won {won}/{n}, tied {tied}, "
-              f"{'inside' if inside else 'OUTSIDE'} bound {m['bound']:.0%}")
+              f"parent IQR {q3 - q1:.4g}, change won {won}/{n}, tied {tied}, {bound}")
     sys.exit(1 if out else 0)
 
 
