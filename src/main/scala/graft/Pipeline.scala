@@ -75,29 +75,39 @@ object MatchPipeline {
 
   /** Deterministic fake: 10 participants; the queried player is placed by
     * id hash; pre-2021 matches (even hash) omit gameEndTimestamp, which
-    * exercises the units fallback. ~every 13th id returns 503 once.
+    * exercises the units fallback. Every call returns 200. The document
+    * is written in one pass into one builder.
     */
   def fakeFetcher(puuid: String): Fetcher = { id =>
     val h = math.abs(id.hashCode.toLong)
     val slot = (h % 10).toInt
-    val players = (0 until 10)
-      .map(i => if (i == slot) puuid else s"PUUID_${h % 997}_$i")
     val hasEnd = h % 2 == 1
     val start = 1600000000000L + (h % 100000000L)
-    val endField =
-      if (hasEnd) s""""gameEndTimestamp": ${start + 1800000L},""" else ""
-    val parts = players.zipWithIndex.map { case (p, i) =>
-      s"""{"puuid": "$p", "win": ${i % 2 == 0}, "kills": ${(h + i) % 20},
-         |"deaths": ${(h + i) % 11}, "assists": ${(h + i) % 25},
-         |"champion": {"name": "champ_${(h + i) % 160}", "level": ${1 + ((h + i) % 18).toInt}}}""".stripMargin
-    }.mkString(",")
-    val doc =
-      s"""{"metadata": {"matchId": "$id", "participants": [${players.map(p => s""""$p"""").mkString(",")}]},
-         |"info": {"gameCreation": $start, "gameDuration": ${if (hasEnd) 1800 else 1800000L},
-         |"gameStartTimestamp": $start, $endField
-         |"gameId": ${h % 10000000L}, "gameMode": "CLASSIC", "gameVersion": "12.5.1",
-         |"mapId": 11, "participants": [$parts]}}""".stripMargin
-    (200, doc)
+    val b = new java.lang.StringBuilder(1600)
+    def player(i: Int): Unit =
+      if (i == slot) b.append(puuid) else b.append("PUUID_").append(h % 997).append('_').append(i)
+    b.append("{\"metadata\": {\"matchId\": \"").append(id).append("\", \"participants\": [")
+    for (i <- 0 until 10) {
+      if (i > 0) b.append(',')
+      b.append('"'); player(i); b.append('"')
+    }
+    b.append("]},\n\"info\": {\"gameCreation\": ").append(start)
+      .append(", \"gameDuration\": ").append(if (hasEnd) 1800L else 1800000L)
+      .append(",\n\"gameStartTimestamp\": ").append(start).append(", ")
+    if (hasEnd) b.append("\"gameEndTimestamp\": ").append(start + 1800000L).append(',')
+    b.append("\n\"gameId\": ").append(h % 10000000L)
+      .append(", \"gameMode\": \"CLASSIC\", \"gameVersion\": \"12.5.1\",")
+      .append("\n\"mapId\": 11, \"participants\": [")
+    for (i <- 0 until 10) {
+      val x = h + i
+      if (i > 0) b.append(',')
+      b.append("{\"puuid\": \""); player(i)
+      b.append("\", \"win\": ").append(i % 2 == 0).append(", \"kills\": ").append(x % 20)
+        .append(",\n\"deaths\": ").append(x % 11).append(", \"assists\": ").append(x % 25)
+        .append(",\n\"champion\": {\"name\": \"champ_").append(x % 160)
+        .append("\", \"level\": ").append(1 + x % 18).append("}}")
+    }
+    (200, b.append("]}}").toString)
   }
 
   /** Most detail calls in flight per JVM: the reference's default

@@ -198,17 +198,13 @@ object AnnIndex {
         call_function("graft_pq_encode", col("n_vec"), pqFlat, lit(dsub), lit(kEff)))
   }
 
-  /** Ledger sidecar inside the postings dir recording the last streaming
-    * batch id applied (underscore-prefixed: parquet readers skip it).
-    * The summary tier's [[graft.operators.SummaryTables.BatchLedger]]
-    * discipline applied to the index.
+  /** The last streaming batch id applied to the index: the
+    * [[CoreOps.lastBatch]] ledger of the postings swap scope, read under
+    * [[recoverVacuum]]'s monitor because the read recovers that scope.
     */
-  private[graft] val AppendLedger = "_GRAFT_LAST_BATCH"
-
-  private[graft] def lastAppendedBatch(dir: String): Long = {
-    val f = java.nio.file.Paths.get(postingsPath(dir), AppendLedger)
-    if (!java.nio.file.Files.exists(f)) -1L
-    else new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toLong
+  private[graft] def postingsLedger(spark: SparkSession, dir: String): Long = synchronized {
+    val (live, staged, old) = swapPaths(dir, "postings")
+    CoreOps.lastBatch(CoreOps.fsOf(spark, dir), live, staged, old, s"AnnIndex($dir)")
   }
 
   /** EXACTLY-ONCE streaming append ([[graft.streaming.StreamingOps
@@ -216,13 +212,11 @@ object AnnIndex {
     * idempotent, so unlike [[append]] a replayed micro-batch must be a
     * no-op. The batch is assigned through the stored quantizer
     * ([[assignForAppend]]) and committed via the maintenance tier's
-    * staged swap with the batch-id LEDGER riding INSIDE the staged dir —
-    * data and ledger become visible in one atomic rename, so the crash
-    * window between "applied" and "recorded" does not exist: a crash
-    * before the swap leaves the old postings + ledger intact (the
-    * replayed batch re-stages), a crash inside the swap is finished by
-    * [[recoverVacuum]] on the next call WITH the new ledger already in
-    * the staged bytes. Returns false when the ledger shows `batchId`
+    * staged swap with the [[CoreOps.BatchLedger]] riding INSIDE the
+    * staged dir: a crash before the swap leaves the old postings and
+    * ledger intact (the replayed batch re-stages), a crash inside the
+    * swap is finished by the next ledger read WITH the new ledger already
+    * in the staged bytes. Returns false when the ledger shows `batchId`
     * already applied (the replay skip).
     *
     * Scale note, stated honestly: the swap REWRITES the live postings
@@ -238,12 +232,10 @@ object AnnIndex {
       idCol: String = "vec_id", vecCol: String = "embedding",
       attrCols: Seq[String] = Nil): Boolean = {
     val spark = newVectors.sparkSession
-    recoverVacuum(spark, dir) // ledger read AFTER recovery (the maintain lesson)
-    if (batchId <= lastAppendedBatch(dir)) return false
+    if (CoreOps.replayed(batchId, postingsLedger(spark, dir))) return false
     val assigned = assignForAppend(newVectors, dir, idCol, vecCol, attrCols)
     val all = spark.read.parquet(postingsPath(dir)).unionByName(assigned)
-    stageAndSwapPostings(spark, dir, all,
-      extraStagedFiles = Map(AppendLedger -> batchId.toString))
+    stageAndSwapPostings(spark, dir, all, Some(batchId))
     true
   }
 
@@ -307,13 +299,15 @@ object AnnIndex {
   /** Shared staged rewrite for the maintenance operations ([[vacuum]],
     * [[compactPostings]], [[reassignPostings]], [[appendBatch]]): write
     * the new postings to `postings_staged`, then commit them through
-    * [[swap]]. A rewrite that would leave the index EMPTY is refused — a
-    * fully purged index should be dropped, not served as an unreadable
-    * dir. Returns the staged row count.
+    * [[swap]] with the postings ledger as its sidecar: `batchId` for an
+    * [[appendBatch]], the live ledger carried forward for a maintenance
+    * rewrite ([[CoreOps.ledgerSidecar]]). A rewrite that would leave the
+    * index EMPTY is refused — a fully purged index should be dropped, not
+    * served as an unreadable dir. Returns the staged row count.
     */
   private def stageAndSwapPostings(
       spark: SparkSession, dir: String, rewritten: DataFrame,
-      extraStagedFiles: Map[String, String] = Map.empty): Long = {
+      batchId: Option[Long] = None): Long = {
     val staged = swapPaths(dir, "postings")._2.toString
     rewritten.write.mode("overwrite").partitionBy("cell").parquet(staged)
     // explicit schema: an all-rows-removed staged dir has no parquet
@@ -325,18 +319,8 @@ object AnnIndex {
         s"AnnIndex($dir): rewrite would remove every posting — an empty " +
           "index is unreadable; drop the index directory instead")
     }
-    // sidecars ride the swap: [[appendBatch]]'s batch ledger lands here
-    // so data and ledger become visible in one rename. A maintenance
-    // rewrite that supplies no ledger CARRIES the existing one forward —
-    // a vacuum/compact must not lose it, or a replayed streaming batch
-    // would be re-admitted (the SummaryTables ledgerless-maintain rule).
-    val carried: Map[String, String] =
-      if (extraStagedFiles.contains(AppendLedger)) extraStagedFiles
-      else lastAppendedBatch(dir) match {
-        case -1L => extraStagedFiles
-        case id => extraStagedFiles + (AppendLedger -> id.toString)
-      }
-    swap(spark, dir, "postings", carried)
+    swap(spark, dir, "postings",
+      CoreOps.ledgerSidecar(batchId, postingsLedger(spark, dir)))
     after
   }
 

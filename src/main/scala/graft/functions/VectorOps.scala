@@ -752,22 +752,6 @@ object VectorOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     AnnIndex.build(corpus, dir, nlist, trainRounds, dsub, ksub, idCol, vecCol)
 
-  /** [[ivfTopK]] against a STORED index (zero training jobs at query
-    * time; cell-partitioned postings prune unprobed files).
-    */
-  def ivfTopKIndexed(
-      queries: DataFrame, indexDir: String, k: Int, nprobe: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    AnnIndex.ivfTopK(queries, indexDir, k, nprobe, idCol, vecCol)
-
-  /** [[pqTopK]] against a STORED index (codebook + codes read, never
-    * retrained).
-    */
-  def pqTopKIndexed(
-      queries: DataFrame, indexDir: String, k: Int, rerank: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    AnnIndex.pqTopK(queries, indexDir, k, rerank, idCol, vecCol)
-
   /** Distributed covariance of an embedding column, upper triangle as
     * (i, j, cov) rows with 1-based dims: each row explodes into its
     * d(d+1)/2 grid-quantized products (the k-means posexplode pattern,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.ops.ContentTag
+import graft.ops.{ContentTag, CoreOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,10 +102,11 @@ object DupClusterStore {
   // `base/` plus per-batch `batch=<id>/` parquet APPENDS (sizes rows
   // are member-count DELTAS, summed by [[sizesView]]), and the small
   // assign table's staged swap (rename-aside, `_GRAFT_COMMIT`-gated)
-  // carries the batch-id ledger LAST as the single visibility event —
-  // readers admit only batch dirs at or under the committed ledger, so
-  // a crash between the appends and the assign swap leaves invisible
-  // orphan dirs that the next writer deletes before re-appending.
+  // carries the batch ledger ([[CoreOps.BatchLedger]]) LAST as the
+  // single visibility event — readers admit only batch dirs at or under
+  // the committed ledger, so a crash between the appends and the assign
+  // swap leaves invisible orphan dirs that the next writer deletes
+  // before re-appending.
   // maintain() therefore WRITES O(batch) bytes, not O(store): the r19
   // whole-root swap re-wrote the full membership/postings tables per
   // micro-batch — exactly the failure mode the store exists to avoid
@@ -121,27 +122,29 @@ object DupClusterStore {
   // are fine — group and cluster minima re-close correctly.
   // ------------------------------------------------------------------
 
-  private val Ledger = "_GRAFT_LAST_BATCH"
   private val AppendTables = Seq("membership", "sizes", "postings")
 
-  /** Recover BOTH swap scopes: the whole-root swap (build/retract) and
-    * the assign-table swap (maintain's commit unit). Safe no-op on a
-    * fresh or healthy store.
+  /** Recover BOTH swap scopes and read the store's ledger: the
+    * whole-root swap (build/retract) first, then the assign-table swap
+    * (maintain's commit unit), which [[CoreOps.lastBatch]] recovers
+    * before it reads the ledger inside `assign/` — the ledger flips with
+    * the assignment. Returns the last applied batch id, or -1; safe on
+    * a fresh or healthy store.
     */
-  private[graft] def recoverStore(s: SparkSession, root: String, op: String): Unit = {
-    graft.ops.CoreOps.recoverSwap(s, root, op)
-    graft.ops.CoreOps.recoverSwap(s, s"$root/assign", op)
+  private[graft] def recoverStore(s: SparkSession, root: String, op: String): Long = {
+    CoreOps.recoverSwap(s, root, op)
+    CoreOps.lastBatch(s, s"$root/assign", op)
   }
 
   /** Committed parts of an append-table: `base/` plus every
-    * `batch=<id>/` dir at or under the ledger — orphan dirs from a
+    * `batch=<id>/` dir at or under the ledger `led` — orphan dirs from a
     * crash between the appends and the assign swap stay invisible.
     */
-  private def tableParts(s: SparkSession, root: String, name: String): Seq[String] = {
-    val fs = graft.ops.CoreOps.fsOf(s, root)
+  private def tableParts(
+      s: SparkSession, root: String, name: String, led: Long): Seq[String] = {
+    val fs = CoreOps.fsOf(s, root)
     val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
     if (!fs.exists(dir)) return Seq.empty
-    val led = lastBatch(root)
     fs.listStatus(dir).toSeq.map(_.getPath).flatMap { p =>
       p.getName match {
         case "base" => Some(p.toString)
@@ -153,25 +156,24 @@ object DupClusterStore {
     }
   }
 
-  private def readTable(s: SparkSession, root: String, name: String): DataFrame =
-    s.read.parquet(tableParts(s, root, name): _*)
+  private def readTable(s: SparkSession, root: String, name: String, led: Long): DataFrame =
+    s.read.parquet(tableParts(s, root, name, led): _*)
 
   /** The sizes table's CURRENT view: base rows plus per-batch deltas
     * (joiner arrivals append (gid, n_sh, n_add) rows), summed per gid.
     */
-  private def sizesView(s: SparkSession, root: String): DataFrame =
-    readTable(s, root, "sizes").groupBy("gid")
+  private def sizesView(s: SparkSession, root: String, led: Long): DataFrame =
+    readTable(s, root, "sizes", led).groupBy("gid")
       .agg(max(col("n_sh")).as("n_sh"), sum(col("n_members")).as("n_members"))
       .select("gid", "n_sh", "n_members")
 
-  /** Delete orphan `batch=<id>` dirs above the committed ledger — the
-    * leftovers of a maintain that crashed between its table appends and
-    * the assign swap. Called by the writer before re-appending, so
+  /** Delete orphan `batch=<id>` dirs above the committed ledger `led` —
+    * the leftovers of a maintain that crashed between its table appends
+    * and the assign swap. Called by the writer before re-appending, so
     * replay is idempotent.
     */
-  private def cleanOrphans(s: SparkSession, root: String): Unit = {
-    val fs = graft.ops.CoreOps.fsOf(s, root)
-    val led = lastBatch(root)
+  private def cleanOrphans(s: SparkSession, root: String, led: Long): Unit = {
+    val fs = CoreOps.fsOf(s, root)
     AppendTables.foreach { name =>
       val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
       if (fs.exists(dir))
@@ -206,23 +208,13 @@ object DupClusterStore {
       maintainIncremental(s, docs.filter(col("doc_id") > cut), root, batchId = 0L)
     }
 
-  /** Last batch id applied to the incremental store, or -1. The ledger
-    * rides the ASSIGN table (r20: the assign swap is maintain's single
-    * visibility event, so the ledger and the assignment flip together).
-    */
-  def lastBatch(root: String): Long = {
-    val f = java.nio.file.Paths.get(root, "assign", Ledger)
-    if (!java.nio.file.Files.exists(f)) -1L
-    else new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toLong
-  }
-
   /** (doc_id, cluster_id) for clustered docs — the [[ensure]] table's
     * schema, read from the incremental store.
     */
   def assignmentsIncremental(s: SparkSession, root: String): DataFrame = {
     // reads self-heal an interrupted swap, like every store here
-    recoverStore(s, root, "DupClusterStore.assignmentsIncremental")
-    readTable(s, root, "membership")
+    val led = recoverStore(s, root, "DupClusterStore.assignmentsIncremental")
+    readTable(s, root, "membership", led)
       .join(s.read.parquet(s"$root/assign"), Seq("gid"))
       .select(col("doc_id"), col("cid").as("cluster_id"))
   }
@@ -232,7 +224,7 @@ object DupClusterStore {
       s: SparkSession, docs: DataFrame, root: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.05, n: Int = 3): Unit = {
-    recoverStore(s, root, "DupClusterStore.buildIncremental")
+    val led = recoverStore(s, root, "DupClusterStore.buildIncremental")
     val d = docs.select(col(idCol).as("doc_id"),
       md5(col(textCol)).as("h"), col(textCol).as("__text"))
     val g = d.groupBy("h")
@@ -249,7 +241,7 @@ object DupClusterStore {
     val postings = hashed.select(col("gid"), explode(col("shs")).as("sh"))
     val assign = gidAssign(crossEdges(postings, postings, sizes, sizes, threshold),
       sizes.filter(col("n_members") >= 2 && col("n_sh") > 0).select("gid"))
-    swapRoot(s, root, batchId = None) { staging =>
+    swapRoot(s, root, CoreOps.ledgerSidecar(None, led)) { staging =>
       membership.write.parquet(s"$staging/membership/base")
       sizes.write.parquet(s"$staging/sizes/base")
       postings.write.parquet(s"$staging/postings/base")
@@ -269,17 +261,17 @@ object DupClusterStore {
   def maintainIncremental(
       s: SparkSession, newDocs: DataFrame, root: String, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Boolean = {
-    recoverStore(s, root, "DupClusterStore.maintainIncremental")
-    if (batchId <= lastBatch(root)) return false
+    val led = recoverStore(s, root, "DupClusterStore.maintainIncremental")
+    if (CoreOps.replayed(batchId, led)) return false
     // a replay of a maintain that crashed between its appends and the
     // assign swap left orphan batch dirs above the ledger — readers
     // never saw them; delete before re-appending (idempotent replay)
-    cleanOrphans(s, root)
+    cleanOrphans(s, root, led)
     val meta = s.read.parquet(s"$root/meta").head()
     val (threshold, n) = (meta.getAs[Double]("threshold"), meta.getAs[Int]("n"))
-    val membership = readTable(s, root, "membership")
-    val sizes = sizesView(s, root)
-    val postings = readTable(s, root, "postings")
+    val membership = readTable(s, root, "membership", led)
+    val sizes = sizesView(s, root, led)
+    val postings = readTable(s, root, "postings", led)
     val assign = s.read.parquet(s"$root/assign")
 
     val d = newDocs.select(col(idCol).as("doc_id"),
@@ -375,7 +367,7 @@ object DupClusterStore {
       .write.parquet(s"$root/sizes/batch=$batchId")
     // 2) the assign swap is the single visibility event: new assignment
     //    + the advanced ledger flip together, rename-aside recovered
-    swapAssign(s, root, batchId)(assignNew)
+    swapAssign(s, root, CoreOps.ledgerSidecar(Some(batchId), led))(assignNew)
     true
   }
 
@@ -409,13 +401,13 @@ object DupClusterStore {
   def retractIncremental(
       s: SparkSession, ids: DataFrame, root: String, batchId: Long,
       idCol: String = "doc_id"): Boolean = {
-    recoverStore(s, root, "DupClusterStore.retractIncremental")
-    if (batchId <= lastBatch(root)) return false
-    cleanOrphans(s, root)
+    val led = recoverStore(s, root, "DupClusterStore.retractIncremental")
+    if (CoreOps.replayed(batchId, led)) return false
+    cleanOrphans(s, root, led)
     val threshold = s.read.parquet(s"$root/meta").head().getAs[Double]("threshold")
-    val membership = readTable(s, root, "membership")
-    val sizes = sizesView(s, root)
-    val postings = readTable(s, root, "postings")
+    val membership = readTable(s, root, "membership", led)
+    val sizes = sizesView(s, root, led)
+    val postings = readTable(s, root, "postings", led)
     val assign = s.read.parquet(s"$root/assign")
     val rm = ids.select(col(idCol).as("doc_id")).distinct().localCheckpoint()
 
@@ -459,7 +451,7 @@ object DupClusterStore {
     // retraction rewrites the touched tables (it renames gids and drops
     // rows store-wide, so appends cannot express it) — the whole-root
     // staged swap compacts the batch dirs back into base/
-    swapRoot(s, root, batchId = Some(batchId)) { staging =>
+    swapRoot(s, root, CoreOps.ledgerSidecar(Some(batchId), led)) { staging =>
       mem2.write.parquet(s"$staging/membership/base")
       sizes2.write.parquet(s"$staging/sizes/base")
       post2.write.parquet(s"$staging/postings/base")
@@ -493,10 +485,9 @@ object DupClusterStore {
     // r19): a store whose last commit crashed mid-rename (target
     // missing, staging complete) must be recovered, not rejected at
     // analysis time
-    graft.ops.CoreOps.recoverSwap(spark, root, "graft_dup_clusters_store")
-    if (lastBatch(root) < 0L &&
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$root/assign")))
+    recoverStore(spark, root, "graft_dup_clusters_store")
+    if (!CoreOps.fsOf(spark, root)
+        .exists(new org.apache.hadoop.fs.Path(s"$root/assign")))
       throw new IllegalArgumentException(
         s"graft_dup_clusters_store: no incremental dup-cluster store at " +
           s"'$root' (build one with DupClusterStore.buildIncremental)")
@@ -591,40 +582,35 @@ object DupClusterStore {
   }
 
   /** Whole-root staged swap: `build` writes every table into
-    * `root.staging`, and [[graft.ops.CoreOps.commitSwap]] commits it
-    * with the ledger (when given, or carried forward) as its
-    * `assign/_GRAFT_LAST_BATCH` sidecar — one visibility event for the
+    * `root.staging`, and [[CoreOps.commitSwap]] commits it with the
+    * `ledger` sidecar inside `assign/` — one visibility event for the
     * whole store.
     */
   private def swapRoot(
-      s: SparkSession, root: String, batchId: Option[Long])(
+      s: SparkSession, root: String, ledger: Map[String, String])(
       build: String => Unit): Unit = {
-    val fs = graft.ops.CoreOps.fsOf(s, root)
-    val (live, staging, old) = graft.ops.CoreOps.siblings(root)
+    val fs = CoreOps.fsOf(s, root)
+    val (live, staging, old) = CoreOps.siblings(root)
     fs.delete(staging, true)
     build(staging.toString)
-    // carry the ledger forward on ledgerless rewrites (the AnnIndex /
-    // SummaryTables rule: losing it would re-admit replayed ids); the
-    // ledger lives INSIDE assign/ (r20 — it flips with the assignment)
-    val ledger = batchId.orElse(Some(lastBatch(root)).filter(_ >= 0))
-    graft.ops.CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore",
-      ledger.map(id => s"assign/$Ledger" -> id.toString).toMap)
+    CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore",
+      ledger.map { case (name, id) => s"assign/$name" -> id })
   }
 
   /** Maintain's commit unit (r20): stage the new assignment next to the
-    * live one and commit it through [[graft.ops.CoreOps.commitSwap]]
-    * with the advanced ledger as its sidecar — the store's single
-    * visibility event.
+    * live one and commit it through [[CoreOps.commitSwap]] with the
+    * advanced `ledger` as its sidecar — the store's single visibility
+    * event.
     */
   private def swapAssign(
-      s: SparkSession, root: String, batchId: Long)(assignNew: DataFrame): Unit = {
-    val fs = graft.ops.CoreOps.fsOf(s, root)
-    val (live, staging, old) = graft.ops.CoreOps.siblings(s"$root/assign")
+      s: SparkSession, root: String, ledger: Map[String, String])(
+      assignNew: DataFrame): Unit = {
+    val fs = CoreOps.fsOf(s, root)
+    val (live, staging, old) = CoreOps.siblings(s"$root/assign")
     fs.delete(staging, true)
     // the plan still READS root/assign — fully materialize to staging
     // first (hash-spread layout, no single-task coalesce)
     assignNew.repartition(col("gid")).write.parquet(staging.toString)
-    graft.ops.CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore",
-      Map(Ledger -> batchId.toString))
+    CoreOps.commitSwap(fs, live, staging, old, "DupClusterStore", ledger)
   }
 }

@@ -271,9 +271,6 @@ object SummaryTables {
         baseAfter = Some(orders))
     }
 
-  /** Name of the applied-batch ledger sidecar (see `batchId` below). */
-  private[graft] val BatchLedger = "_GRAFT_LAST_BATCH"
-
   /** (summaryPath, maintainable column set) pairs whose stored schema
     * already validated — maintain()'s fail-fast footer read runs once
     * per pair, not per micro-batch. maintain()'s own staged swaps
@@ -293,21 +290,6 @@ object SummaryTables {
     */
   private[graft] def invalidateValidated(path: String): Unit =
     validatedSchemas.keySet.removeIf(_._1 == path)
-
-  /** Last batch id applied to the summary at `path`, or -1 (fresh
-    * summaries, incl. plain-rollup bootstraps, have no ledger).
-    */
-  private def lastAppliedBatch(spark: SparkSession, path: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val f = new org.apache.hadoop.fs.Path(path, BatchLedger)
-    if (!fs.exists(f)) -1L
-    else {
-      val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
 
   /** Incrementally maintain a stored summary from a CDC feed of BASE
     * TABLE rows ([[graft.ops.ChangeFeed.diff]]'s row model over the base
@@ -354,6 +336,11 @@ object SummaryTables {
     *                   targeted group repair described above. The caller
     *                   owns the "after" contract (hand the same frame
     *                   that the feed was diffed INTO).
+    * @param batchId    the feed's micro-batch id, recorded in the
+    *                   summary's batch ledger
+    *                   ([[graft.ops.CoreOps.BatchLedger]]): a replayed id
+    *                   is a no-op, and a maintain without one carries
+    *                   the ledger forward.
     */
   def maintain(
       summaryPath: String, feed: DataFrame, groupKeys: Seq[String],
@@ -364,11 +351,10 @@ object SummaryTables {
       cntColsBase: Map[String, String] = Map.empty,
       baseAfter: Option[DataFrame] = None): Unit = {
     val spark = feed.sparkSession
-    // recovery FIRST: a crash between the swap's two renames leaves the
-    // target (and its ledger) missing with a complete staging — reading
-    // the ledger before recovering would see -1 and re-apply the very
-    // batch the staged table already contains
-    graft.ops.CoreOps.recoverSwap(spark, summaryPath, "SummaryTables.maintain")
+    // the ledger read recovers an interrupted swap of the summary first
+    // (fresh summaries, incl. plain-rollup bootstraps, have no ledger)
+    val lastApplied =
+      graft.ops.CoreOps.lastBatch(spark, summaryPath, "SummaryTables.maintain")
     // the stored summary must carry EXACTLY the columns this call can
     // maintain (keys + count + the given partials): a summary with an
     // extra partial (e.g. a sum-of-expression column no feed row can
@@ -404,20 +390,8 @@ object SummaryTables {
       validatedSchemas.put((summaryPath, maintainable), java.lang.Boolean.TRUE)
     }
     // exactly-once under replayed feeds (the streaming sink's contract):
-    // deltas are NOT idempotent, so a caller supplying a monotonically
-    // increasing batchId gets dedup — an already-applied id is a no-op,
-    // and the new id is written as a sidecar INSIDE the staged swap, so
-    // ledger and data become visible atomically together (a crash
-    // between "applied" and "recorded" cannot exist)
-    val lastApplied = lastAppliedBatch(spark, summaryPath)
-    if (batchId.exists(_ <= lastApplied)) return
-    // a ledgerless maintain on a ledgered summary must CARRY the ledger
-    // forward (losing it would re-admit an already-applied batch id)
-    val ledgerEntry: Map[String, String] = batchId match {
-      case Some(id) => Map(BatchLedger -> id.toString)
-      case None if lastApplied >= 0 => Map(BatchLedger -> lastApplied.toString)
-      case None => Map.empty
-    }
+    // a caller supplying a monotonically increasing batchId gets dedup
+    if (batchId.exists(graft.ops.CoreOps.replayed(_, lastApplied))) return
     // the retraction probe is a feed scan — only pay it when min/max
     // partials make the answer matter (the count/sum-only streaming hot
     // path skips one Spark job per micro-batch). With `baseAfter`
@@ -486,7 +460,7 @@ object SummaryTables {
       .agg(deltaAggs.head, deltaAggs.tail: _*)
     graft.ops.CoreOps.swapCore(spark, summaryPath,
         "SummaryTables.maintain",
-        extraStagedFiles = ledgerEntry) { old =>
+        extraStagedFiles = graft.ops.CoreOps.ledgerSidecar(batchId, lastApplied)) { old =>
       // NULL-SAFE key join: groupBy puts all NULL keys in ONE group, so
       // the merge must too — a using-columns join would leave the stored
       // NULL-group row unmatched (stale) next to a delta-only row

@@ -270,7 +270,7 @@ object CoreOps {
 
   /** The one staged-directory commit every store here uses: `staged` is
     * fully written by the caller; its `sidecars` (name relative to
-    * `staged` -> UTF-8 contents, e.g. a stream's applied-batch ledger)
+    * `staged` -> UTF-8 contents, e.g. a [[ledgerSidecar]])
     * land next, then the [[CommitMarker]], so data, sidecars and marker
     * become visible together or not at all. The swap renames `live`
     * ASIDE to `old` (when it exists — a first build has none), renames
@@ -296,6 +296,53 @@ object CoreOps {
     require(fs.rename(staged, live), s"$op($live): rename $staged -> $live failed")
     fs.delete(old, true)
   }
+
+  /** The applied-batch ledger: a sidecar holding the last micro-batch id
+    * committed into a swap scope (underscore-prefixed: parquet readers
+    * skip it). Deltas and appends are not idempotent, so a store that
+    * absorbs a stream's batches reads it with [[lastBatch]], skips a
+    * [[replayed]] id, and hands [[ledgerSidecar]] to [[commitSwap]]: the
+    * ledger and the data become visible together, so a crash between
+    * "applied" and "recorded" cannot exist.
+    */
+  private[graft] val BatchLedger = "_GRAFT_LAST_BATCH"
+
+  /** The last batch id in the ledger of the swap scope `live`, or -1 when
+    * it holds none. Runs [[recoverSwap]] over the scope first: a crash
+    * between the swap's two renames leaves `live` and its ledger missing
+    * beside a complete `staged` copy, and a read before recovery would
+    * see -1 and re-apply the batch that copy already holds.
+    */
+  private[graft] def lastBatch(
+      fs: FileSystem, live: Path, staged: Path, old: Path, op: String): Long = {
+    recoverSwap(fs, live, staged, old, op)
+    val f = new Path(live, BatchLedger)
+    if (!fs.exists(f)) -1L
+    else {
+      val in = fs.open(f)
+      try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+    }
+  }
+
+  /** [[lastBatch]] of the scope at `path` and its `.staging`/`.old` siblings. */
+  private[graft] def lastBatch(spark: SparkSession, path: String, op: String): Long = {
+    val (live, staged, old) = siblings(path)
+    lastBatch(fsOf(spark, path), live, staged, old, op)
+  }
+
+  /** The replay check: `batchId` is already applied to a scope whose
+    * [[lastBatch]] reads `last`.
+    */
+  private[graft] def replayed(batchId: Long, last: Long): Boolean = batchId <= last
+
+  /** The ledger sidecar a commit into a ledgered scope writes: `batchId`
+    * when given; otherwise `last`, the id the live copy already holds,
+    * carried forward so that a replayed id stays rejected; nothing while
+    * the scope has no ledger. `last` is read only when no id is given.
+    */
+  private[graft] def ledgerSidecar(
+      batchId: Option[Long], last: => Long): Map[String, String] =
+    batchId.orElse(Some(last).filter(_ >= 0)).map(id => BatchLedger -> id.toString).toMap
 
   /** Rewrite the keyed table at `path` as `f(current)` through
     * [[commitSwap]] with the `.staging`/`.old` siblings: the rewritten

@@ -47,8 +47,9 @@ object FakeMatchIdClient {
   *  - `SupportsPushDownFilters`: `queue = v` / `queue IN (…)` predicates
   *    become the set of queues scanned — the `?queue=` query param.
   *  - `SupportsPushDownLimit`: a LIMIT caps the pages planned per queue
-  *    (`?count=` + page cap). Partial push (`pushLimit` returns false):
-  *    Spark still applies the exact global limit on top.
+  *    (`?count=` + page cap) below `idsPerQueue`, which caps them for
+  *    every client. Partial push (`pushLimit` returns false): Spark
+  *    still applies the exact global limit on top.
   *
   * The (queue, page) requests are packed into at most
   * `spark.sql.leafNodeDefaultParallelism` contiguous, balanced
@@ -102,14 +103,14 @@ class MatchIdsTable(options: CaseInsensitiveStringMap) extends Table with Suppor
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
     val pageSize = opts.getInt("pageSize", 100)
-    val maxPerQueue = opts.getInt("maxPerQueue", 1000)
+    val conf = MatchIdsSource.conf(options)
     require(pageSize > 0, s"option pageSize must be > 0, got $pageSize")
-    require(maxPerQueue >= 0, s"option maxPerQueue must be >= 0, got $maxPerQueue")
-    new MatchIdsScanBuilder(MatchIdsSource.conf(options), pageSize, maxPerQueue)
+    require(conf.idsPerQueue >= 0, s"option idsPerQueue must be >= 0, got ${conf.idsPerQueue}")
+    new MatchIdsScanBuilder(conf, pageSize)
   }
 }
 
-class MatchIdsScanBuilder(conf: MatchIdsSource.ClientConf, pageSize: Int, maxPerQueue: Int)
+class MatchIdsScanBuilder(conf: MatchIdsSource.ClientConf, pageSize: Int)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownLimit {
 
   private var queueSubset: Option[Set[Int]] = None
@@ -140,7 +141,7 @@ class MatchIdsScanBuilder(conf: MatchIdsSource.ClientConf, pageSize: Int, maxPer
 
   override def build(): Scan = {
     val queues = queueSubset.fold(conf.queues)(s => conf.queues.filter(s))
-    val perQueueCap = math.min(maxPerQueue, limit.getOrElse(maxPerQueue))
+    val perQueueCap = math.min(conf.idsPerQueue, limit.getOrElse(conf.idsPerQueue))
     new MatchIdsScan(conf, queues, pageSize, perQueueCap, pushed)
   }
 }

@@ -726,12 +726,10 @@ object StreamingOps {
     * as per-group deltas ([[graft.operators.SummaryTables.maintain]]) —
     * the streaming closing of the MV loop. Deltas are NOT idempotent,
     * so unlike the other foreachBatch sinks at-least-once is not enough:
-    * the micro-batch id is passed as `batchId` and recorded in a ledger
-    * sidecar that rides THE SAME atomic staged swap as the data, so a
-    * replayed batch is skipped — applied-and-recorded is one visibility
-    * event, and the crash window between them does not exist. min/max
-    * partials inherit maintain()'s insert-only restriction. SINGLE
-    * WRITER REQUIRED.
+    * the micro-batch id is passed as `batchId` and recorded in the
+    * summary's batch ledger ([[graft.ops.CoreOps.BatchLedger]]), so a
+    * replayed batch is skipped. min/max partials inherit maintain()'s
+    * insert-only restriction. SINGLE WRITER REQUIRED.
     */
   def maintainSummaryEachBatch(
       feed: DataFrame, summaryPath: String, groupKeys: Seq[String],
@@ -760,12 +758,10 @@ object StreamingOps {
     * vectors is assigned through the STORED quantizer (cell from the
     * stored centroids, codes from the stored codebook — never a
     * retrain) and committed by [[graft.functions.AnnIndex.appendBatch]]
-    * via the maintenance tier's staged swap with the micro-batch id
-    * ledger riding inside the staged bytes — the
-    * [[maintainSummaryEachBatch]] discipline applied to the index:
-    * appends are not idempotent, so at-least-once replay is absorbed by
-    * the ledger (a replayed id is a no-op), and applied-and-recorded is
-    * one atomic visibility event. This closes the ingest story: build
+    * with the micro-batch id in the postings' batch ledger
+    * ([[graft.ops.CoreOps.BatchLedger]]): appends are not idempotent, so
+    * at-least-once replay is absorbed by the ledger (a replayed id is a
+    * no-op). This closes the ingest story: build
     * once, stream appends forever, retrain/reassign/vacuum on a cadence
     * (the quantizer-drift loop q_ann_index_drift schedules). SINGLE
     * WRITER REQUIRED, as for all index maintenance.
@@ -789,12 +785,12 @@ object StreamingOps {
     * ([[graft.operators.DupClusterStore.maintainIncremental]] — exact
     * n-gram Jaccard against the STORED distinct-text shingle index,
     * connectivity re-closure over star-compressed stored components,
-    * spec-pinned bit-equal to a full rebuild), committed through the
-    * whole-root staged swap with the micro-batch-id ledger inside the
-    * staged bytes. The dedup-at-ingest closing of the cluster-once
-    * story: the corpus is never re-scanned, per-batch work is
-    * batch-proportional, and at-least-once replay is absorbed by the
-    * ledger. Ingest contract (the relaxed r19 form maintainIncremental
+    * spec-pinned bit-equal to a full rebuild), committed with the
+    * micro-batch id in the store's batch ledger
+    * ([[graft.ops.CoreOps.BatchLedger]]). The dedup-at-ingest closing of
+    * the cluster-once story: the corpus is never re-scanned, per-batch
+    * work is batch-proportional, and at-least-once replay is absorbed by
+    * the ledger. Ingest contract (the relaxed r19 form maintainIncremental
     * enforces): fresh texts may arrive at ANY id and re-inserted ids
     * are refused (updates retract first); the one unstable case — a
     * JOINER of an existing exact-dup group arriving below that group's

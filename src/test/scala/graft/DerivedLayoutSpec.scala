@@ -163,7 +163,7 @@ class DerivedLayoutSpec extends SparkSpec {
     assert(DupClusterStore.ensureIncrementalDemo(spark, dir) == root)
     assert(!Files.exists(Paths.get(s"$root.staging")) &&
       !Files.exists(Paths.get(s"$root.old")))
-    assert(DupClusterStore.lastBatch(root) == 0L)
+    assert(graft.ops.CoreOps.lastBatch(spark, s"$root/assign", "DerivedLayoutSpec") == 0L)
     assert(DupClusterStore.assignmentsIncremental(spark, root)
       .collect().map(_.toString).sorted.toSeq == clean)
   }

@@ -22,6 +22,10 @@ class DupClusterStoreSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
+  /** The store's batch ledger, which sits inside `assign/`. */
+  private def ledger(root: String): Long =
+    graft.ops.CoreOps.lastBatch(spark, s"$root/assign", "DupClusterStoreSpec")
+
   test("stored assignments equal a fresh clustering bit-for-bit") {
     val stored = DupClusterStore.assignments(spark, sfDir)
     assert(rows(stored) == rows(fresh))
@@ -51,21 +55,24 @@ class DupClusterStoreSpec extends SparkSpec {
     DupClusterStore.buildIncremental(spark, docs, s"$work/all")
     assert(rows(DupClusterStore.assignmentsIncremental(spark, s"$work/all"))
       == rows(fresh))
-    // split at the id median: build on the old half, maintain the new
+    // split at the id median: build on the old half, maintain the new —
+    // at a plain path and at a file: URI, since the store reads and
+    // writes through Hadoop FS and its ledger must resolve the same way
     val a = docs.filter(col("doc_id") < 250)
     val b = docs.filter(col("doc_id") >= 250)
-    val root = s"$work/split"
-    DupClusterStore.buildIncremental(spark, a, root)
-    assert(DupClusterStore.maintainIncremental(spark, b, root, batchId = 0L))
-    assert(rows(DupClusterStore.assignmentsIncremental(spark, root))
-      == rows(fresh),
-      "incremental maintain must equal the full rebuild bit-for-bit")
-    // replayed batch id is a no-op (ledger inside the swapped bytes)
-    assert(!DupClusterStore.maintainIncremental(spark, b, root, batchId = 0L))
-    assert(DupClusterStore.lastBatch(root) == 0L)
-    // ingest-append contract: ids at or below the stored max are refused
-    intercept[IllegalArgumentException] {
-      DupClusterStore.maintainIncremental(spark, a, root, batchId = 1L)
+    for (root <- Seq(s"$work/split", s"file://$work/split_uri")) withClue(s"root $root: ") {
+      DupClusterStore.buildIncremental(spark, a, root)
+      assert(DupClusterStore.maintainIncremental(spark, b, root, batchId = 0L))
+      assert(rows(DupClusterStore.assignmentsIncremental(spark, root))
+        == rows(fresh),
+        "incremental maintain must equal the full rebuild bit-for-bit")
+      // replayed batch id is a no-op (ledger inside the swapped bytes)
+      assert(!DupClusterStore.maintainIncremental(spark, b, root, batchId = 0L))
+      assert(ledger(root) == 0L)
+      // ingest-append contract: ids at or below the stored max are refused
+      intercept[IllegalArgumentException] {
+        DupClusterStore.maintainIncremental(spark, a, root, batchId = 1L)
+      }
     }
   }
 
@@ -142,7 +149,7 @@ class DupClusterStoreSpec extends SparkSpec {
       Seq(3L, 4L).toDF("doc_id"), root, batchId = 0L))
     assert(DupClusterStore.maintainIncremental(spark,
       Seq((9L, d1 + " tail")).toDF("doc_id", "text"), root, batchId = 1L))
-    assert(DupClusterStore.lastBatch(root) == 1L)
+    assert(ledger(root) == 1L)
   }
 
   test("incremental store: bulk retraction equals a rebuild on the survivors (sf0.001)") {
@@ -299,7 +306,7 @@ class DupClusterStoreSpec extends SparkSpec {
     } finally st.close()
     java.nio.file.Files.move(rootP, java.nio.file.Paths.get(root + ".old"))
     assert(rows(DupClusterStore.assignmentsIncremental(spark, root)) == before)
-    assert(DupClusterStore.lastBatch(root) == 7L)
+    assert(ledger(root) == 7L)
   }
 
   test("stored consumers match the self-contained registered queries") {

@@ -69,7 +69,7 @@ class HttpPipelineSpec extends SparkSpec {
       // S2: the DSv2 scan over HTTP, with a queue predicate to push
       val ids = spark.read.format("graft.sources.MatchIdsSource")
         .option("queues", "400,430").option("idsPerQueue", idsPerQueue)
-        .option("pageSize", 10).option("maxPerQueue", idsPerQueue)
+        .option("pageSize", 10)
         .option("baseUrl", base)
         .load()
         .filter(col("queue") === 430)

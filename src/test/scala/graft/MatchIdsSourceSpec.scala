@@ -1,5 +1,6 @@
 package graft
 
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.sources.FakeMatchIdClient
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -52,29 +53,48 @@ class MatchIdsSourceSpec extends SparkSpec {
   }
 
   test("a queue's scan stops at its short last page") {
+    // the fake client always holds `idsPerQueue` ids, the cap the scan
+    // plans to, so only a service holding fewer ids sends a short page:
+    // this one holds 100 per queue against the default cap of 1000
+    val requests = new java.util.concurrent.atomic.AtomicInteger
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/ids", (x: HttpExchange) => {
+      requests.incrementAndGet()
+      val p = x.getRequestURI.getQuery.split("&").map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+      val (start, count) = (p("start").toInt, p("count").toInt)
+      val body = (start until math.min(start + count, 100))
+        .map(i => s""""NA1_${p("queue")}_$i"""").mkString("[", ",", "]").getBytes("UTF-8")
+      x.sendResponseHeaders(200, body.length.toLong)
+      x.getResponseBody.write(body)
+      x.close()
+    })
+    server.start()
     spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
     try {
       val df = spark.read.format("graft.sources.MatchIdsSource")
-        .option("queues", "400,430").option("idsPerQueue", 100).load()
-      val n = fetchesDuring {
-        assert(df.count() == 200)
-      }
+        .option("queues", "400,430")
+        .option("baseUrl", s"http://127.0.0.1:${server.getAddress.getPort}").load()
+      assert(df.count() == 200)
+      val n = requests.get
       // the default cap plans 10 pages per queue; page 0 is full and
       // page 1 comes back empty, so each queue stops after 2 requests
       assert(n == 4, s"expected 4 page fetches, got $n")
-    } finally spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+    } finally {
+      spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+      server.stop(0)
+    }
   }
 
-  test("pageSize <= 0 and maxPerQueue < 0 are rejected, naming the option") {
+  test("pageSize <= 0 and idsPerQueue < 0 are rejected, naming the option") {
     def scan(opt: String, v: Int): DataFrame =
       spark.read.format("graft.sources.MatchIdsSource")
         .option("queues", "400").option(opt, v).load()
-    Seq("pageSize" -> 0, "pageSize" -> -100, "maxPerQueue" -> -1).foreach { case (opt, v) =>
+    Seq("pageSize" -> 0, "pageSize" -> -100, "idsPerQueue" -> -1).foreach { case (opt, v) =>
       val e = intercept[IllegalArgumentException](scan(opt, v).count())
       assert(e.getMessage.contains(opt), e.getMessage)
     }
     val n = fetchesDuring {
-      assert(scan("maxPerQueue", 0).count() == 0)
+      assert(scan("idsPerQueue", 0).count() == 0)
     }
     assert(n == 0)
   }

@@ -175,6 +175,64 @@ class PipelineSpec extends SparkSpec {
     assert(df.filter(col("match_id") === short).count() == 0)
   }
 
+  test("fakeFetcher documents are pinned byte for byte, with and without gameEndTimestamp") {
+    val f = MatchPipeline.fakeFetcher("PUUID_00ab12cd34ef5678")
+    // an even id hash: no gameEndTimestamp, duration in milliseconds
+    assert(f("NA1_400_0000000") == ((200, Seq(
+      """{"metadata": {"matchId": "NA1_400_0000000", "participants": ["PUUID_427_0","PUUID_427_1","PUUID_427_2","PUUID_427_3","PUUID_427_4","PUUID_427_5","PUUID_00ab12cd34ef5678","PUUID_427_7","PUUID_427_8","PUUID_427_9"]},""",
+      """"info": {"gameCreation": 1600010142396, "gameDuration": 1800000,""",
+      """"gameStartTimestamp": 1600010142396, """,
+      """"gameId": 142396, "gameMode": "CLASSIC", "gameVersion": "12.5.1",""",
+      """"mapId": 11, "participants": [{"puuid": "PUUID_427_0", "win": true, "kills": 16,""",
+      """"deaths": 5, "assists": 21,""",
+      """"champion": {"name": "champ_156", "level": 5}},{"puuid": "PUUID_427_1", "win": false, "kills": 17,""",
+      """"deaths": 6, "assists": 22,""",
+      """"champion": {"name": "champ_157", "level": 6}},{"puuid": "PUUID_427_2", "win": true, "kills": 18,""",
+      """"deaths": 7, "assists": 23,""",
+      """"champion": {"name": "champ_158", "level": 7}},{"puuid": "PUUID_427_3", "win": false, "kills": 19,""",
+      """"deaths": 8, "assists": 24,""",
+      """"champion": {"name": "champ_159", "level": 8}},{"puuid": "PUUID_427_4", "win": true, "kills": 0,""",
+      """"deaths": 9, "assists": 0,""",
+      """"champion": {"name": "champ_0", "level": 9}},{"puuid": "PUUID_427_5", "win": false, "kills": 1,""",
+      """"deaths": 10, "assists": 1,""",
+      """"champion": {"name": "champ_1", "level": 10}},{"puuid": "PUUID_00ab12cd34ef5678", "win": true, "kills": 2,""",
+      """"deaths": 0, "assists": 2,""",
+      """"champion": {"name": "champ_2", "level": 11}},{"puuid": "PUUID_427_7", "win": false, "kills": 3,""",
+      """"deaths": 1, "assists": 3,""",
+      """"champion": {"name": "champ_3", "level": 12}},{"puuid": "PUUID_427_8", "win": true, "kills": 4,""",
+      """"deaths": 2, "assists": 4,""",
+      """"champion": {"name": "champ_4", "level": 13}},{"puuid": "PUUID_427_9", "win": false, "kills": 5,""",
+      """"deaths": 3, "assists": 5,""",
+      """"champion": {"name": "champ_5", "level": 14}}]}}""").mkString("\n"))))
+    // an odd id hash: gameEndTimestamp present, duration in seconds
+    assert(f("NA1_400_0000001") == ((200, Seq(
+      """{"metadata": {"matchId": "NA1_400_0000001", "participants": ["PUUID_426_0","PUUID_426_1","PUUID_426_2","PUUID_426_3","PUUID_426_4","PUUID_00ab12cd34ef5678","PUUID_426_6","PUUID_426_7","PUUID_426_8","PUUID_426_9"]},""",
+      """"info": {"gameCreation": 1600010142395, "gameDuration": 1800,""",
+      """"gameStartTimestamp": 1600010142395, "gameEndTimestamp": 1600011942395,""",
+      """"gameId": 142395, "gameMode": "CLASSIC", "gameVersion": "12.5.1",""",
+      """"mapId": 11, "participants": [{"puuid": "PUUID_426_0", "win": true, "kills": 15,""",
+      """"deaths": 4, "assists": 20,""",
+      """"champion": {"name": "champ_155", "level": 4}},{"puuid": "PUUID_426_1", "win": false, "kills": 16,""",
+      """"deaths": 5, "assists": 21,""",
+      """"champion": {"name": "champ_156", "level": 5}},{"puuid": "PUUID_426_2", "win": true, "kills": 17,""",
+      """"deaths": 6, "assists": 22,""",
+      """"champion": {"name": "champ_157", "level": 6}},{"puuid": "PUUID_426_3", "win": false, "kills": 18,""",
+      """"deaths": 7, "assists": 23,""",
+      """"champion": {"name": "champ_158", "level": 7}},{"puuid": "PUUID_426_4", "win": true, "kills": 19,""",
+      """"deaths": 8, "assists": 24,""",
+      """"champion": {"name": "champ_159", "level": 8}},{"puuid": "PUUID_00ab12cd34ef5678", "win": false, "kills": 0,""",
+      """"deaths": 9, "assists": 0,""",
+      """"champion": {"name": "champ_0", "level": 9}},{"puuid": "PUUID_426_6", "win": true, "kills": 1,""",
+      """"deaths": 10, "assists": 1,""",
+      """"champion": {"name": "champ_1", "level": 10}},{"puuid": "PUUID_426_7", "win": false, "kills": 2,""",
+      """"deaths": 0, "assists": 2,""",
+      """"champion": {"name": "champ_2", "level": 11}},{"puuid": "PUUID_426_8", "win": true, "kills": 3,""",
+      """"deaths": 1, "assists": 3,""",
+      """"champion": {"name": "champ_3", "level": 12}},{"puuid": "PUUID_426_9", "win": false, "kills": 4,""",
+      """"deaths": 2, "assists": 4,""",
+      """"champion": {"name": "champ_4", "level": 13}}]}}""").mkString("\n"))))
+  }
+
   test("truncate-reload: a second run fully replaces the first") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe2").toString + "/m"
     MatchPipeline.run(spark, puuid, Seq(400), idsPerQueue = 50, outPath = out)

@@ -902,7 +902,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("id").as("doc_id"), col("cluster_id")))
     assert(rows(DupClusterStore.assignmentsIncremental(spark, root)) == expect)
     assert(expect.contains((10L, 1L)) && expect.contains((20L, 2L)))
-    assert(DupClusterStore.lastBatch(root) >= 1L)
+    assert(graft.ops.CoreOps.lastBatch(spark, s"$root/assign", "StreamingSpec") >= 1L)
   }
 
   case class Vec(vec_id: Long, embedding: Array[Float])
@@ -941,7 +941,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       // two micro-batches == one batch append of the union, probe-equal
       assert(probe(dirA) == probe(dirB))
-      assert(AnnIndex.lastAppendedBatch(dirA) >= 1L)
+      assert(AnnIndex.postingsLedger(spark, dirA) >= 1L)
     } finally q.stop()
     val nRows = spark.read.parquet(s"$dirA/postings").count()
     // REPLAY: re-delivering an already-applied micro-batch id is a
@@ -969,14 +969,18 @@ class StreamingSpec extends SparkSpec {
       } finally st.close()
     }
     copyTree(postings, staged)
-    java.nio.file.Files.write(staged.resolve(AnnIndex.AppendLedger),
-      "99".getBytes("UTF-8"))
+    // the staged ledger as commitSwap writes it, through Hadoop's local
+    // FS: that also rewrites the checksum file copied beside it, which a
+    // java.nio write would leave stale for the ledger read to reject
+    val ledger = graft.ops.CoreOps.fsOf(spark, dirA).create(
+      new org.apache.hadoop.fs.Path(staged.toString, graft.ops.CoreOps.BatchLedger), true)
+    try ledger.write("99".getBytes("UTF-8")) finally ledger.close()
     val marker = staged.resolve(graft.ops.CoreOps.CommitMarker)
     if (!java.nio.file.Files.exists(marker))
       java.nio.file.Files.createFile(marker)
     java.nio.file.Files.move(postings, old)
     assert(probe(dirA) == probe(dirB)) // recovery finished the swap
-    assert(AnnIndex.lastAppendedBatch(dirA) == 99L,
+    assert(AnnIndex.postingsLedger(spark, dirA) == 99L,
       "the recovered swap must surface the staged ledger with the data")
     assert(!AnnIndex.appendBatch(d1, dirA, batchId = 99L)) // still deduped
   }
